@@ -1,18 +1,65 @@
-"""Hadoop FileSystem helpers — object-store-safe filesystem metadata ops.
+"""Hadoop FileSystem helpers and the engine's one directory-commit protocol.
 
 Every sink/cache in the engine does its partition bookkeeping
-(existence checks, version listing, atomic rename-commit, bucket
-drops) through THIS module, which routes to Hadoop's ``FileSystem``
-API via the session JVM — so a target path may be ``file:/...``,
-``hdfs://...``, ``s3a://...`` or any other registered scheme and the
-code is identical. Driver-local ``os``/``shutil`` calls (the round-1/2
-implementation) only ever worked on a single machine; reference
-analogue for the sink these serve: the cache commit + TTL versioning
-in /root/reference/src/services/dataManager.ts:26-77.
+(existence checks, version listing, commits, bucket drops) through
+THIS module, which routes to Hadoop's ``FileSystem`` API via the
+session JVM — so a target path may be ``file:/...``, ``hdfs://...``,
+``s3a://...`` or any other registered scheme and the code is
+identical. All calls are driver-side METADATA operations
+(list/stat/rename) — O(entries) namenode/object-store RPCs, never data
+movement. The text read/write helpers exist for small JSON sidecars
+only.
 
-All calls are driver-side METADATA operations (list/stat/rename) —
-O(entries) namenode/object-store RPCs, never data movement. The text
-read/write helpers exist for small JSON sidecars only.
+Commit protocol
+---------------
+How a directory becomes visible is decided here and nowhere else: no
+other module renames. It is the reference's one durability idea —
+write the new cache, then swap it in atomically with a version stamp
+(src/services/dataManager.ts:68-77).
+
+``rename`` is atomic on HDFS but a non-atomic COPY on raw object
+stores (S3A without a table format), so a crash mid-commit can leave a
+torn destination that looks real to a lister. Every commit therefore
+ends with the ``{dir}/_COMMITTED`` marker, written LAST, and readers
+treat a directory without it as garbage. (Spark's own ``_SUCCESS`` is
+written into the staging dir before the rename, travels WITH the copy
+and can be present in a torn destination — it cannot be the marker.)
+A write-once dir (a per-batch partial) needs nothing more: write it,
+then mark it. Every other commit takes one of four shapes:
+
+- **Versioned commit** (SnapshotCache, LandingJob, VerdictCache):
+  :func:`next_version` numbers the new ``v{n}`` one past every version
+  dir on disk, torn ones included, so a number is never reused. The
+  writer stages the data in a sibling dir, :func:`commit` renames it
+  to ``v{n}`` (raising, with the staged data left in place, if the
+  rename fails) and stamps the marker, and :func:`sweep_versions` then
+  keeps the newest ``keep`` COMMITTED versions and deletes every other
+  ``v{n}`` — a torn dir never takes a slot in the keep-window. Readers
+  resolve with :func:`newest_committed`.
+- **Promote a built dir** (the build-artifact store,
+  ``plans.queries._streamed_artifact``): build in a process-unique
+  scratch dir, :func:`commit` the servable subdir to the deterministic
+  artifact path; a builder that loses the promote race serves the
+  winner. A committed artifact is never rewritten.
+- **Two-rename swap** (``sources.maintenance`` compaction/scrub,
+  ``SignatureIndex.scrub``): a rewrite of a dir readers address by
+  name. :func:`swap_in` marks the staged copy, moves the original
+  aside, moves the copy in and drops the original;
+  :func:`repair_swap` finishes or rolls back each crash window.
+  Generic filesystems have no atomic directory swap, so the path is
+  briefly absent: run these in a maintenance window.
+- **Manifest fold** (``SignatureIndex.compact``,
+  ``RollupMaintainer.compact``): fold many committed input dirs into
+  one ``base``. :func:`install_fold` writes the ``_FOLDED`` manifest
+  into the staged fold, marks it, deletes the listed inputs and
+  renames the fold to ``base``. That install path IS the heal path,
+  :func:`heal_fold`: a crash after the mark is finished on the next
+  read (no input is ever served next to the fold that contains it),
+  a crash before it sweeps the staging.
+
+Directory names (``v{n}``, ``_staging_v{n}``, dot-prefixed staging and
+old dirs) are a data format, chosen by each caller and passed here as
+full paths; roots written by older code are read and healed as-is.
 """
 
 from __future__ import annotations
@@ -63,7 +110,8 @@ def rename(spark: SparkSession, src_str: str, dst_str: str) -> bool:
     """Same-filesystem rename — the atomic-commit primitive on HDFS
     (and a fast metadata op on file:). On S3 rename is a copy; a real
     deployment there fronts the layout with a Delta/Iceberg log — the
-    call-site semantics (commit version n+1) are unchanged."""
+    call-site semantics (commit version n+1) are unchanged. Used only
+    by the commit primitives below."""
     fs, src = _fs_path(spark, src_str)
     _, dst = _fs_path(spark, dst_str)
     return fs.rename(src, dst)
@@ -135,19 +183,7 @@ def write_text(spark: SparkSession, path_str: str, content: str) -> None:
         out.close()
 
 
-# ---- commit-marker protocol -------------------------------------------------
-#
-# ``rename`` is atomic on HDFS but a non-atomic COPY on raw object
-# stores (S3A without a table format): a crash mid-commit can leave a
-# torn destination directory that looks real to a lister. The marker
-# protocol closes that window without a Delta/Iceberg dependency:
-# writers create ``{dir}/_COMMITTED`` as the LAST step of a commit, and
-# readers treat any version directory lacking the marker as garbage.
-# (Spark's own ``_SUCCESS`` is written by the output committer into the
-# STAGING dir before the rename, so it travels WITH the copy and can be
-# present in a torn destination — it cannot serve as the marker.)
-# Reference analogue: the atomic cache replace + version stamp in
-# /root/reference/src/services/dataManager.ts:68-77.
+# ---- commit protocol (see the module docstring) ----------------------------
 
 COMMIT_MARKER = "_COMMITTED"
 
@@ -167,9 +203,8 @@ def list_versions(
 ) -> list[tuple[int, str]]:
     """All ``{prefix}N`` version directories under ``root`` as
     (number, name) pairs sorted by number — committed or not. The
-    single source for version enumeration (SnapshotCache, LandingJob,
-    VerdictCache all resolve through here, so padded and unpadded
-    naming schemes behave identically)."""
+    single source for version enumeration, so padded (``v000001``) and
+    unpadded (``v1``) naming schemes behave identically."""
     out = []
     for name in list_names(spark, root.rstrip("/"), dirs_only=True):
         if name.startswith(prefix) and name[len(prefix):].isdigit():
@@ -200,6 +235,129 @@ def newest_committed(
     return None
 
 
+def committed_versions(
+    spark: SparkSession, root: str, prefix: str = "v"
+) -> list[tuple[int, str]]:
+    """The marker-stamped subset of :func:`list_versions`."""
+    r = root.rstrip("/")
+    return [
+        (n, name)
+        for n, name in list_versions(spark, r, prefix)
+        if is_committed(spark, f"{r}/{name}")
+    ]
+
+
+def next_version(spark: SparkSession, root: str) -> int:
+    """One past the highest ``v{n}`` directory under ``root``,
+    committed or torn: a torn dir still holds its number, and counting
+    only committed (or surviving) versions would reuse it."""
+    return max((n for n, _ in list_versions(spark, root)), default=0) + 1
+
+
+def commit(spark: SparkSession, staged: str, final: str) -> None:
+    """Rename the fully written ``staged`` dir to ``final``, then stamp
+    ``final`` committed. A failed rename raises and leaves the staged
+    data in place: on a racy or transient failure it may be the only
+    copy of what was just produced."""
+    if not rename(spark, staged, final):
+        raise IOError(
+            f"commit rename failed: {staged} -> {final} (staged data left in place)"
+        )
+    mark_committed(spark, final)
+
+
+def sweep_versions(spark: SparkSession, root: str, keep: int) -> None:
+    """Keep the newest ``keep`` COMMITTED ``v{n}`` dirs under ``root``
+    and delete every other one, torn dirs included. Counting torn dirs
+    toward the window would evict a real prior version while keeping
+    garbage. Callers must ensure no live query still reads a dropped
+    version (the Delta VACUUM contract)."""
+    r = root.rstrip("/")
+    versions = list_versions(spark, r)
+    committed = [name for _, name in versions if is_committed(spark, f"{r}/{name}")]
+    kept = set(committed[max(len(committed) - keep, 0):])
+    for _, name in versions:
+        if name not in kept:
+            delete(spark, f"{r}/{name}")
+
+
+def swap_in(spark: SparkSession, p: str, staging: str, old: str) -> None:
+    """Install the fully staged rewrite ``staging`` at ``p`` via the
+    two-rename swap: mark staging committed, move the original aside
+    to ``old``, move staging in, drop the original. The marker is what
+    tells :func:`repair_swap` the staged copy is whole. Hadoop rename
+    returns False instead of raising; every failure fails CLOSED with
+    the original reachable (directly or via :func:`repair_swap`)."""
+    mark_committed(spark, staging)
+    delete(spark, old)
+    if not rename(spark, p, old):
+        delete(spark, staging)
+        raise RuntimeError(f"swap aborted: could not move {p} aside")
+    if not rename(spark, staging, p):
+        restored = rename(spark, old, p)
+        raise RuntimeError(
+            f"swap failed installing the staged copy at {p}; "
+            + ("original restored" if restored
+               else f"original preserved at {old} (repair_swap heals it)")
+        )
+    delete(spark, old)
+
+
+def repair_swap(spark: SparkSession, p: str, staging: str, old: str) -> str:
+    """Heal the crash windows of an interrupted :func:`swap_in`:
+
+    - ``p`` is the hole and staging committed: finish the swap;
+    - ``p`` is the hole and only ``old`` is left: roll it back;
+    - otherwise sweep staging/old leftovers.
+
+    Returns one of 'clean', 'finished_swap', 'rolled_back', 'swept'."""
+    if not exists(spark, p):
+        if is_committed(spark, staging):
+            rename(spark, staging, p)
+            delete(spark, old)
+            return "finished_swap"
+        if exists(spark, old):
+            rename(spark, old, p)
+            delete(spark, staging)
+            return "rolled_back"
+    swept = False
+    for leftover in (staging, old):
+        swept = delete(spark, leftover) or swept
+    return "swept" if swept else "clean"
+
+
+FOLD_MANIFEST = "_FOLDED"
+
+
+def install_fold(spark: SparkSession, staging: str, base: str, manifest: str) -> None:
+    """Install the fully written fold ``staging`` as ``base``.
+    ``manifest`` names the folded input dirs (siblings of ``base``), one
+    per line; blank lines and ``#`` lines are not names, and a name
+    already gone is skipped. It is written BEFORE the marker: a committed
+    fold must always know its inputs, or a crash mid-deletion would
+    leave some alive next to the installed base — served twice."""
+    write_text(spark, f"{staging}/{FOLD_MANIFEST}", manifest)
+    mark_committed(spark, staging)
+    heal_fold(spark, staging, base)
+
+
+def heal_fold(spark: SparkSession, staging: str, base: str) -> None:
+    """Finish or roll back a fold left at ``staging``: a committed fold
+    deletes the manifest-listed inputs still present, replaces ``base``
+    and takes its place; an uncommitted one is swept (the inputs still
+    serve). Idempotent, so a crash anywhere heals on the next call."""
+    root = base.rsplit("/", 1)[0]
+    manifest = read_text(spark, f"{staging}/{FOLD_MANIFEST}")
+    if manifest is not None and is_committed(spark, staging):
+        for name in manifest.split("\n"):
+            if name and not name.startswith("#"):
+                delete(spark, f"{root}/{name}")
+        delete(spark, base)
+        rename(spark, staging, base)
+    else:
+        delete(spark, staging)
+
+
 def adopt_unmarked_versions(
     spark: SparkSession, root: str, prefix: str = "v"
 ) -> list[str]:
@@ -217,9 +375,7 @@ def adopt_unmarked_versions(
     """
     adopted = []
     r = root.rstrip("/")
-    for name in list_names(spark, r, dirs_only=True):
-        if not (name.startswith(prefix) and name[len(prefix):].isdigit()):
-            continue
+    for _, name in list_versions(spark, r, prefix):
         d = f"{r}/{name}"
         if not is_committed(spark, d):
             mark_committed(spark, d)

@@ -441,26 +441,6 @@ def label_cell_assign_two_level(
     ).drop("__coarse", "__lc")
 
 
-def ivf_index(
-    df: DataFrame,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    sample_fraction: float | None = None,
-):
-    """IVF coarse quantizer: k-means cells over the vectors.
-
-    Returns ``(assigned_df, centers)`` where ``assigned_df`` adds a
-    ``__cell`` column (nearest-centroid id) and ``centers`` is the
-    local list of centroids for query-side probing. Composition of
-    :func:`ivf_train` (fit on ``sample_fraction`` — the offline build)
-    and :func:`ivf_assign` (expression-only argmin — the one full-table
-    pass)."""
-    centers = ivf_train(df, n_cells, vec_col, seed, sample_fraction)
-    return ivf_assign(df, centers, vec_col), centers
-
-
 def cosine_topk_ivf(
     df: DataFrame,
     query_vec: list[float],
@@ -667,7 +647,7 @@ def embedding_near_duplicates(
     if bands < 1:
         raise ValueError(f"bands must be >= 1, got {bands}")
     dim = resolve_dim(df, vec_col, dim)
-    from cdc_makanmana_spark.operators.dedup import _materialize
+    from cdc_makanmana_spark.operators.dedup import materialize
 
     # (id, vec, band-signature) rows, MATERIALIZED once: the signature
     # is bits x bands interpreted hyperplane dots per row, and this
@@ -682,7 +662,7 @@ def embedding_near_duplicates(
     # and pairs outnumber rows whenever duplicates are dense (measured
     # 2.3x slower at sf1 on the organic fixture).
     sigs = _cap_buckets(
-        _materialize(_band_signatures(df, vec_col, id_col, bits, bands, seed, dim)),
+        materialize(_band_signatures(df, vec_col, id_col, bits, bands, seed, dim)),
         max_bucket,
     )
     a = sigs.select(F.col("__id").alias("id_a"), F.col("__vec").alias("vec_a"), "__bs")
@@ -752,7 +732,7 @@ def embedding_cross_hits(
             f"embedding dim mismatch: corpus={dim}, bench={bench_dim} — "
             "cross-set LSH needs both sides in the same vector space"
         )
-    from cdc_makanmana_spark.operators.dedup import _materialize
+    from cdc_makanmana_spark.operators.dedup import materialize
 
     def prep(df: DataFrame) -> DataFrame:
         sigs = _band_signatures(df, vec_col, id_col, bits, bands, seed, dim)
@@ -761,7 +741,7 @@ def embedding_cross_hits(
             # be pure storage overhead (the single-set operator's
             # materialize is justified by its THREE consumers)
             return sigs
-        return _cap_buckets(_materialize(sigs), max_bucket)
+        return _cap_buckets(materialize(sigs), max_bucket)
 
     if max_bucket is None:
         sc = prep(corpus)

@@ -179,7 +179,7 @@ def bpe_train_merges(
     Determinism: ties on pair frequency break lexicographically, so
     the merge list is a pure function of the corpus.
     """
-    from cdc_makanmana_spark.operators.dedup import _materialize
+    from cdc_makanmana_spark.operators.dedup import materialize
 
     words = (
         _drop_blank_text(df, text_col)
@@ -194,7 +194,7 @@ def bpe_train_merges(
             "freq",
         )
     )
-    vocab = _materialize(words)
+    vocab = materialize(words)
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         pairs = vocab.select(
@@ -222,7 +222,7 @@ def bpe_train_merges(
         # append s unless the accumulator ends with a and s == b, in
         # which case the tail becomes ab. Overlapping runs (a=b) merge
         # greedily left-first, matching the reference algorithm.
-        vocab = _materialize(
+        vocab = materialize(
             vocab.select(F.expr(_bpe_fold_sql(a, b)).alias("sym"), "freq")
         )
     return merges
@@ -246,7 +246,7 @@ def bpe_tokenize(
         F.col(id_col),
         F.posexplode(F.split(_norm_text(F.col(text_col)), " ")).alias("pos", "w"),
     )
-    from cdc_makanmana_spark.operators.dedup import _materialize
+    from cdc_makanmana_spark.operators.dedup import materialize
 
     dict_sym = doc_words.select("w").distinct().withColumn(
         "sym", F.concat(F.split(F.col("w"), ""), F.array(F.lit("</w>")))
@@ -256,7 +256,7 @@ def bpe_tokenize(
             # bound plan depth: a large merge list otherwise nests one
             # HOF fold per merge into a single analyzer-hostile plan;
             # the cut is cheap (the frame is vocabulary-sized)
-            dict_sym = _materialize(dict_sym)
+            dict_sym = materialize(dict_sym)
         dict_sym = dict_sym.withColumn("sym", F.expr(_bpe_fold_sql(a, b)))
     return (
         doc_words.join(F.broadcast(dict_sym), "w")

@@ -112,11 +112,6 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-# historical private name — the cross-module call sites predate the
-# public promotion (r10 ADVICE)
-_materialize = materialize
-
-
 def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Keep one representative row (min id) per exact-content group.
 
@@ -332,7 +327,7 @@ def ngram_jaccard_pairs(
     """
     # (id, hash) feeds four consumers (freq count, cap semi-join,
     # per-doc sizes, bucket build) → materialize once instead of
-    # re-running the shingle explode per consumer (see _materialize).
+    # re-running the shingle explode per consumer (see materialize).
     # Row-form generation (shingle_rows, codegen) emits OCCURRENCES;
     # the per-doc-distinct set every count below assumes is restored by
     # a distinct on the (8-byte id, 8-byte hash) pair — one narrow
@@ -342,7 +337,7 @@ def ngram_jaccard_pairs(
     # 4.3 s single-threaded) — the number that is the bill at 100 TB —
     # and the distinct also shrinks the materialized frame (~20% fewer
     # rows on the fixture).
-    sh = _materialize(
+    sh = materialize(
         shingle_rows(
             _spread(df.select(F.col(id_col).alias("__id"), text_col)),
             text_col,
@@ -470,8 +465,8 @@ def minhash_near_duplicates(
     rows_per_band = num_hashes // bands
     # The banded table feeds both sides of the self-join → materialize
     # the signatures once instead of running the shingle+hash pipeline
-    # twice (see _materialize).
-    sigs = _materialize(
+    # twice (see materialize).
+    sigs = materialize(
         minhash_signatures(_spread(df), text_col, id_col, num_hashes, shingle_n)
     )
     banded = _band_buckets(sigs, bands, rows_per_band)
@@ -658,8 +653,8 @@ def simhash_buckets(
         + ")"
     )
     # Signatures feed both sides of the Hamming-bucket self-join →
-    # materialize the (id, long) table once (see _materialize).
-    return _materialize(votes.select("__id", simhash.alias("simhash")))
+    # materialize the (id, long) table once (see materialize).
+    return materialize(votes.select("__id", simhash.alias("simhash")))
 
 
 def simhash_hamming_pairs(
@@ -716,7 +711,7 @@ def hamming_pairs(
     if not 1 <= max_distance <= 8:
         raise ValueError("max_distance must be in [1, 8]")
     sigs = df.select(F.col(sig_col).alias("simhash"), F.col(id_col).alias("__id"))
-    groups = _materialize(
+    groups = materialize(
         sigs.groupBy("simhash").agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
     )
 
@@ -803,12 +798,12 @@ def connected_components(
     # expensive similarity-join pipeline, and the loop consumes edges
     # every iteration — without the cut, each iteration would re-run
     # the whole pair generation (measured 5×+ total cost).
-    edges = _materialize(
+    edges = materialize(
         pair_df.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pair_df.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
     )
-    labels = _materialize(
+    labels = materialize(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
@@ -856,7 +851,7 @@ def connected_components(
     steps = 0
     while steps < max_iter + 2:
         lab2 = _step(_step(labels))
-        labels = _materialize(lab2)
+        labels = materialize(lab2)
         steps += 2
         new_sum = _label_sum(labels)
         if new_sum == prev_sum:
@@ -1027,7 +1022,7 @@ def dedup_against_corpus(
     cfp = corpus.select(fp.alias("__fp")).filter(F.col("__fp").isNotNull()).distinct()
     survivors = batch.withColumn("__fp", fp).join(cfp, "__fp", "left_anti").drop("__fp")
 
-    bsig = _materialize(
+    bsig = materialize(
         minhash_signatures(_spread(survivors), text_col, id_col, num_hashes, shingle_n)
     )
     csig = minhash_signatures(_spread(corpus), text_col, id_col, num_hashes, shingle_n)
@@ -1039,7 +1034,7 @@ def dedup_against_corpus(
     )
     # cand feeds three consumers (two id prunes + the rerank join) —
     # cut lineage so the LSH candidate pipeline runs once
-    cand = _materialize(
+    cand = materialize(
         bb.join(cb, ["band", "bucket"])
         .select("__bid", "__cid")
         .dropDuplicates(["__bid", "__cid"])

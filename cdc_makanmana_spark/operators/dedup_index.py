@@ -27,7 +27,9 @@ committed dirs only). A foreachBatch retry of a committed batch is a
 no-op (rewriting it from the retry's re-dedup — which sees the
 batch's own rows — would wipe its entries); a retry of a crashed,
 uncommitted append overwrites the unmarked leftovers. ``ingest`` is
-the composed foreachBatch body with the recovery path.
+the composed foreachBatch body with the recovery path. ``scrub`` and
+``compact`` rewrite committed dirs with the swap and fold shapes of the
+engine's commit protocol (described once, in ``cdc_makanmana_spark.fs``).
 Readers list batch directories through the Hadoop FS API. Every
 shuffle key in the dedup path is an 8-byte hash. At 100 TB the batch
 directories would graduate to a single bucketed table (band, bucket
@@ -54,8 +56,8 @@ from cdc_makanmana_spark.functions.text import doc_fingerprint
 from cdc_makanmana_spark.operators.dedup import (
     _band_buckets,
     _drop_blank_text,
-    _materialize,
     _spread,
+    materialize,
     minhash_signatures,
     word_shingles,
 )
@@ -64,7 +66,7 @@ _META = "_index_meta.json"
 _SCRUB_STAGING = ".__scrubstg_"
 _SCRUB_OLD = ".__scrubold_"
 _CMP_STAGING = ".__cmpstg_base"
-_MANIFEST = "_FOLDED"
+_MANIFEST = fs.FOLD_MANIFEST
 
 
 def _shingle_hashes(text_col, shingle_n: int):
@@ -133,7 +135,7 @@ class SignatureIndex:
             self._repair_scrub(root, names)
             names = fs.list_names(self.spark, root, dirs_only=True)
         if _CMP_STAGING in names:
-            self._heal_compact(root)
+            fs.heal_fold(self.spark, f"{root}/{_CMP_STAGING}", f"{root}/base")
             names = fs.list_names(self.spark, root, dirs_only=True)
         return sorted(
             n
@@ -142,27 +144,17 @@ class SignatureIndex:
         )
 
     def _repair_scrub(self, root: str, names: list[str]) -> None:
-        """Heal every crash window of a per-batch scrub rewrite (swap
-        order: mark staging → move batch aside → move staging in →
-        drop old). For each batch with leftovers: finish the swap if
-        the batch dir is the hole and staging committed; roll the
-        original back if staging never committed; otherwise sweep."""
+        """Heal every crash window of a per-batch scrub rewrite
+        (``fs.repair_swap`` on each batch with leftovers)."""
         stag = {n[len(_SCRUB_STAGING):] for n in names if n.startswith(_SCRUB_STAGING)}
         olds = {n[len(_SCRUB_OLD):] for n in names if n.startswith(_SCRUB_OLD)}
         for b in stag | olds:
-            p = f"{root}/{b}"
-            staging = f"{root}/{_SCRUB_STAGING}{b}"
-            old = f"{root}/{_SCRUB_OLD}{b}"
-            if not fs.exists(self.spark, p):
-                if fs.is_committed(self.spark, staging):
-                    fs.rename(self.spark, staging, p)
-                    fs.delete(self.spark, old)
-                elif fs.exists(self.spark, old):
-                    fs.rename(self.spark, old, p)
-                    fs.delete(self.spark, staging)
-                continue
-            fs.delete(self.spark, staging)
-            fs.delete(self.spark, old)
+            fs.repair_swap(
+                self.spark,
+                f"{root}/{b}",
+                f"{root}/{_SCRUB_STAGING}{b}",
+                f"{root}/{_SCRUB_OLD}{b}",
+            )
 
     def _read(self, sub: str) -> DataFrame | None:
         names = self._batch_names(sub)
@@ -224,7 +216,7 @@ class SignatureIndex:
         ignore and the retry overwrites."""
         if self._is_appended(batch_id):
             return
-        entries = _materialize(self._entries(df)) if _entries is None else _entries
+        entries = materialize(self._entries(df)) if _entries is None else _entries
         # provenance column: lets ingest() recover a batch's survivors
         # from a compacted base after the per-batch dir is folded away
         entries = entries.withColumn("src_batch", F.lit(int(batch_id)))
@@ -242,23 +234,6 @@ class SignatureIndex:
         fs.mark_committed(self.spark, bdir)
         entries.write.mode("overwrite").parquet(ddir)
         fs.mark_committed(self.spark, ddir)
-
-    def _heal_compact(self, root: str) -> None:
-        """Finish or roll back a crashed compact(): a committed staging
-        carries a manifest of the batch dirs it folded — delete any
-        still present (serving them next to the staging would double
-        their docs), then install staging as ``base``. Uncommitted
-        staging is swept; the originals still serve."""
-        staging = f"{root}/{_CMP_STAGING}"
-        manifest = fs.read_text(self.spark, f"{staging}/{_MANIFEST}")
-        if fs.is_committed(self.spark, staging) and manifest is not None:
-            for n in manifest.split("\n"):
-                if n and not n.startswith("#"):
-                    fs.delete(self.spark, f"{root}/{n}")
-            fs.delete(self.spark, f"{root}/base")
-            fs.rename(self.spark, staging, f"{root}/base")
-        else:
-            fs.delete(self.spark, staging)
 
     def _folded_ids(self, sub: str) -> set[str]:
         """Batch dir names recorded as folded into ``{sub}/base`` —
@@ -279,8 +254,9 @@ class SignatureIndex:
         carries a manifest of every batch name ever folded, so
         ``_is_appended`` (the double-count guard) and ``ingest``'s
         retry recovery (via the ``src_batch`` provenance column)
-        survive compaction. Staged, manifest-guarded, healed on any
-        read — a crash can never serve a batch twice or lose one.
+        survive compaction. Installed as a manifest fold
+        (``fs.install_fold``), healed on any read — a crash can never
+        serve a batch twice or lose one.
         Returns the number of dirs folded (0 = nothing to do)."""
         total = 0
         for sub in ("docs", "buckets"):
@@ -312,13 +288,12 @@ class SignatureIndex:
                         "src_batch before folding"
                     )
             union.write.mode("overwrite").parquet(staging)
-            fs.write_text(
+            fs.install_fold(
                 self.spark,
-                f"{staging}/{_MANIFEST}",
+                staging,
+                f"{root}/base",
                 "\n".join(sorted(names)) + "\n#ids\n" + "\n".join(sorted(folded)),
             )
-            fs.mark_committed(self.spark, staging)
-            self._heal_compact(root)  # the install path IS the heal path
             total += len(names)
         return total
 
@@ -335,9 +310,8 @@ class SignatureIndex:
 
         ``ids`` is a plain list — erasure requests are tiny by
         contract, and the literal set pushes down into each batch
-        scan. Each touched batch directory is rewritten via a staged
-        swap (staging marked ``_COMMITTED`` → batch dir moved aside →
-        staging moved in → old dropped); staging/old names are
+        scan. Each touched batch directory is rewritten via the
+        two-rename swap (``fs.swap_in``); staging/old names are
         dot-prefixed so readers can never list them as batch dirs, and
         every crash window is healed by ``_repair_scrub`` (invoked on
         every read and at scrub start). Run in a maintenance window —
@@ -377,18 +351,7 @@ class SignatureIndex:
                         f"index scrub aborted on {p}: staged {n_staged} + "
                         f"hit {n_hit} != before {n_before}; batch untouched"
                     )
-                fs.mark_committed(self.spark, staging)
-                fs.delete(self.spark, old)
-                if not fs.rename(self.spark, p, old):
-                    fs.delete(self.spark, staging)
-                    raise RuntimeError(f"index scrub: could not move {p} aside")
-                if not fs.rename(self.spark, staging, p):
-                    rolled = fs.rename(self.spark, old, p)
-                    raise RuntimeError(
-                        f"index scrub failed installing {p}; "
-                        + ("batch restored" if rolled else f"batch preserved at {old}")
-                    )
-                fs.delete(self.spark, old)
+                fs.swap_in(self.spark, p, staging, old)
                 stats[counter] += n_hit
                 stats["batches_rewritten"] += 1
         return stats
@@ -430,7 +393,7 @@ class SignatureIndex:
             self.num_hashes, self.shingle_n,
         )
         if materialize_sig:
-            bsig = _materialize(bsig)
+            bsig = materialize(bsig)
         ib = self.buckets()
         if ib is None:
             return survivors, bsig
@@ -499,9 +462,9 @@ class SignatureIndex:
             kept = kept.select(F.col("id").alias(self.id_col))
             return batch.join(kept, self.id_col, "left_semi")
         survivors, bsig = self._dedup(batch, threshold)
-        survivors = _materialize(survivors)
+        survivors = materialize(survivors)
         if bsig is None:
-            entries = _materialize(self._entries(survivors))
+            entries = materialize(self._entries(survivors))
         else:
             nonblank = F.col(self.text_col).isNotNull() & (
                 F.trim(F.col(self.text_col)) != ""
@@ -513,7 +476,7 @@ class SignatureIndex:
                     nonblank, _shingle_hashes(F.col(self.text_col), self.shingle_n)
                 ).alias("sh"),
             )
-            entries = _materialize(
+            entries = materialize(
                 base.join(
                     bsig.select(F.col("__id").alias("id"), "signature"), "id", "left"
                 )

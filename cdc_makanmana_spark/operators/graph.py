@@ -123,13 +123,13 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     bounded upstream by the edge builder's group cap. Returns
     (id, n_triangles) for nodes in at least one triangle.
     """
-    from cdc_makanmana_spark.operators.dedup import _materialize
+    from cdc_makanmana_spark.operators.dedup import materialize
 
     # the edge list feeds THREE branches of the wedge join — without a
     # lineage cut the entire upstream edge-construction pipeline runs
     # three times (measured: the declared q75 planned 31 exchanges
     # before the cut, 3x the edge builder's own plan)
-    e = _materialize(edges.select("id_a", "id_b").distinct())
+    e = materialize(edges.select("id_a", "id_b").distinct())
     ab = e.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     bc = e.select(F.col("id_a").alias("b"), F.col("id_b").alias("c"))
     ac = e.select(F.col("id_a").alias("a"), F.col("id_b").alias("c"))
@@ -195,7 +195,7 @@ def pagerank(
     (teleport mass splits over in-graph seeds only, so ranks keep
     summing to ~1); raises if no seed intersects the graph.
     """
-    from cdc_makanmana_spark.operators.dedup import _materialize
+    from cdc_makanmana_spark.operators.dedup import materialize
 
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     und = edges.select(
@@ -203,7 +203,7 @@ def pagerank(
     ).unionByName(
         edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"), w.alias("w"))
     ).groupBy("src", "dst").agg(F.sum("w").alias("w"))
-    und = _materialize(und)
+    und = materialize(und)
     deg = und.groupBy("src").agg(F.sum("w").alias("deg"))
     n = deg.count()
     if n == 0:
@@ -212,7 +212,7 @@ def pagerank(
     nodes = deg.select(F.col("src").alias("id"))
     if seeds is None:
         base_col = F.lit(float((1.0 - damping) / n))
-        ranks = _materialize(nodes.withColumn("rank", F.lit(1.0 / n)))
+        ranks = materialize(nodes.withColumn("rank", F.lit(1.0 / n)))
     else:
         # cut the seed frame's lineage BEFORE counting: seeds often
         # derive from the same edge pipeline being ranked (q87), and an
@@ -222,7 +222,7 @@ def pagerank(
         # seed absent from the edge list would otherwise inflate
         # n_seeds while receiving no mass, silently shrinking total
         # teleport below (1-d) and deflating every rank.
-        s = _materialize(seeds.select(F.col("id")).distinct().join(nodes, "id"))
+        s = materialize(seeds.select(F.col("id")).distinct().join(nodes, "id"))
         n_seeds = s.count()
         if n_seeds == 0:
             raise ValueError(
@@ -233,8 +233,8 @@ def pagerank(
             s.withColumn("__s", F.lit(1.0 / n_seeds)), "id", "left"
         ).withColumn("__s", F.coalesce("__s", F.lit(0.0)))
         base_col = F.lit(1.0 - damping) * F.col("__s")
-        ranks = _materialize(with_seed.withColumn("rank", F.col("__s")))
-    links = _materialize(und.join(deg, "src"))
+        ranks = materialize(with_seed.withColumn("rank", F.col("__s")))
+    links = materialize(und.join(deg, "src"))
 
     def step(r: DataFrame, cut: bool = True) -> DataFrame:
         contrib = (
@@ -253,7 +253,7 @@ def pagerank(
                 "rank"
             ),
         )
-        return _materialize(out) if cut else out
+        return materialize(out) if cut else out
 
     def finish(r: DataFrame) -> DataFrame:
         return r.select("id", "rank") if seeds is not None else r

@@ -85,9 +85,9 @@ def interval_join(
     # (lineage cut) and both branches read the same stored rows; without
     # this, an upstream shuffle with unstable intra-partition order
     # silently duplicates or drops points.
-    from cdc_makanmana_spark.operators.dedup import _materialize
+    from cdc_makanmana_spark.operators.dedup import materialize
 
-    p = _materialize(
+    p = materialize(
         points.withColumn("__pid", F.monotonically_increasing_id())
     ).withColumn("__bin", F.floor(F.unix_micros(F.col(point_ts)) / bw_us))
     matched = p.join(ibins, [*keys, "__bin"]).filter(contained).drop("__bin")

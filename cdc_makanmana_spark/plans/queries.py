@@ -13,11 +13,14 @@ Conventions that keep the diff stable:
 
 from __future__ import annotations
 
+import os
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cdc_makanmana_spark import fs
 from cdc_makanmana_spark.functions.geo import haversine_km
 from cdc_makanmana_spark.functions.text import (
     clean_name,
@@ -63,16 +66,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "q01_pricing_summary",
     """
     SELECT l_returnflag, l_linestatus,
-           round(CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE), 2)
+           CAST(round(sum(CAST(l_quantity AS DECIMAL(12,2))), 2) AS DOUBLE)
              AS sum_qty,
-           round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE), 2)
+           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2))), 2) AS DOUBLE)
              AS sum_base_price,
-           round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-                          * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE), 2)
+           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2))
+                          * (1 - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE)
              AS sum_disc_price,
-           round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
+           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2))
                           * (1 - CAST(l_discount AS DECIMAL(4,2)))
-                          * (1 + CAST(l_tax AS DECIMAL(4,2)))) AS DOUBLE), 2)
+                          * (1 + CAST(l_tax AS DECIMAL(4,2)))), 2) AS DOUBLE)
              AS sum_charge,
            round(avg(l_quantity), 4)                                    AS avg_qty,
            round(avg(l_extendedprice), 4)                               AS avg_price,
@@ -91,7 +94,11 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     products stay exact and well inside precision 38), so the hashed
     2-dp rounding is stable at any cardinality: at the 100× organic
     sweep the same-shaped q03 diverged by one cent from double
-    accumulation-order drift on ~1e12 totals (ulp ≈ 2.4e-4). The AVGs
+    accumulation-order drift on ~1e12 totals (ulp ≈ 2.4e-4). They are
+    rounded while still DECIMAL and cast afterwards: a 4- or 6-dp sum
+    can land on an exact half-cent, where Spark and DuckDB round the
+    double apart (269295880.7750 → .78 vs .77) but agree on the
+    DECIMAL (half away from zero). The AVGs
     stay double — their absolute error is ulp(sum)/n, orders of
     magnitude under their rounding."""
     li = _t(spark, sf_dir, "lineitem")
@@ -102,16 +109,16 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(
-                F.sum(F.col("l_quantity").cast("decimal(12,2)")).cast("double"), 2
-            ).alias("sum_qty"),
-            F.round(F.sum(price_d).cast("double"), 2).alias("sum_base_price"),
-            F.round(F.sum(price_d * (1 - disc_d)).cast("double"), 2).alias(
-                "sum_disc_price"
-            ),
-            F.round(
-                F.sum(price_d * (1 - disc_d) * (1 + tax_d)).cast("double"), 2
-            ).alias("sum_charge"),
+            F.round(F.sum(F.col("l_quantity").cast("decimal(12,2)")), 2)
+            .cast("double")
+            .alias("sum_qty"),
+            F.round(F.sum(price_d), 2).cast("double").alias("sum_base_price"),
+            F.round(F.sum(price_d * (1 - disc_d)), 2)
+            .cast("double")
+            .alias("sum_disc_price"),
+            F.round(F.sum(price_d * (1 - disc_d) * (1 + tax_d)), 2)
+            .cast("double")
+            .alias("sum_charge"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),
@@ -952,7 +959,7 @@ def q23_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     32 hashes → P(miss | J=0.9) = (1-0.81)^16 ≈ 3e-12, so the output
     hash-matches the brute-force oracle; a recall bug breaks the match."""
     from cdc_makanmana_spark.operators.dedup import (
-        _materialize,
+        materialize,
         minhash_near_duplicates,
         word_shingles,
     )
@@ -960,7 +967,7 @@ def q23_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # cand feeds the id prune AND the rerank join — cut lineage so the
     # LSH pipeline (signatures + band join) runs once
-    cand = _materialize(
+    cand = materialize(
         minhash_near_duplicates(
             d, "text", "doc_id", num_hashes=32, bands=16, threshold=0.5
         ).select("id_a", "id_b")
@@ -1804,8 +1811,6 @@ def _cache_key(spark: SparkSession, sf_dir: str, *tables: str) -> tuple[str, str
     regenerating the data invalidates every derived cache entry — a
     bare sf_dir key would silently serve artifacts built from the
     previous generation of the files."""
-    from cdc_makanmana_spark import fs
-
     token = ";".join(
         f"{t}={fs.stat_token(spark, f'{sf_dir}/{t}.parquet')}" for t in tables
     )
@@ -1820,7 +1825,6 @@ def _artifact_root() -> str:
     another user on a multi-user host pre-plant or poison committed
     artifacts that queries then serve as results — the _COMMITTED
     marker proves write completion, not write provenance."""
-    import os
     import tempfile
 
     override = os.environ.get("CDC_ARTIFACT_DIR")
@@ -1860,13 +1864,11 @@ def _evict_stale_generations(spark: SparkSession, keep_basename: str):
     growth at one artifact per (name, sf_dir) (the old per-process
     mkdtemp grew per PROCESS; fingerprinted paths would otherwise grow
     per data generation)."""
-    from cdc_makanmana_spark import fs
-
     root = _artifact_root()
     prefix = keep_basename.rsplit("_", 1)[0] + "_"
     for child in fs.list_names(spark, root, dirs_only=True):
-        # spare the kept generation AND any live builder's pid-unique
-        # scratch of that same generation (`<basename>.build-<pid>`,
+        # spare the kept generation AND any live builder's scratch of
+        # that same generation (`<basename>.build-<pid>-<rand>`,
         # _streamed_artifact) — evicting it would tear a concurrent
         # build; scratch dirs of SUPERSEDED generations still go
         if child.startswith(prefix) and not child.startswith(keep_basename):
@@ -1886,35 +1888,77 @@ def _artifact(
     later request is a plain parquet scan (its own lineage root — no
     localCheckpoint blocks to release, no session pinning).
 
-    The cache key folds in a mtime:size fingerprint of the source
-    ``tables`` (fs.stat_token), so regenerating the data under the
-    same sf_dir invalidates the artifact instead of silently serving
-    stale bytes. The on-disk path is deterministic per fingerprint and
-    gated on the ``_COMMITTED`` marker written LAST (fs.mark_committed
-    — the engine's sink commit protocol), so later PROCESSES reuse a
-    committed artifact instead of rebuilding, and a crash mid-build
-    leaves an unmarked dir the next run overwrites. Not safe against
-    two processes building the same artifact at the same instant —
-    acceptable for a build artifact whose rebuild is idempotent."""
-    from cdc_makanmana_spark import fs
-
+    The in-process dict cache around :func:`_streamed_artifact`, which
+    owns the on-disk store: the cache key folds in a mtime:size
+    fingerprint of the source ``tables`` (fs.stat_token), so
+    regenerating the data under the same sf_dir invalidates the
+    artifact instead of silently serving stale bytes, and a committed
+    artifact is reused by later PROCESSES, never rewritten."""
     basename = _artifact_basename(_cache_key(spark, sf_dir, *tables), name, params)
     key = (sf_dir, name, basename)
     path = _ARTIFACTS.get(key)
     if path is None:
-        import os
+        def build_into(work: str) -> None:
+            build().write.mode("overwrite").parquet(f"{work}/out")
 
-        path = os.path.join(_artifact_root(), basename)
-        if not fs.is_committed(spark, path):
-            build().write.mode("overwrite").parquet(path)
-            fs.mark_committed(spark, path)
-            _evict_stale_generations(spark, basename)
+        path = _streamed_artifact(
+            spark, sf_dir, name, tables, params, build_into, serve="out"
+        )
         # superseded in-memory entries for the same (sf_dir, name) can
         # never be hit again (their token changed) — drop them
         for k in [k for k in _ARTIFACTS if k[0] == sf_dir and k[1] == name]:
             del _ARTIFACTS[k]
         _ARTIFACTS[key] = path
     return spark.read.parquet(path)
+
+
+def _streamed_artifact(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    tables: tuple[str, ...],
+    params: str,
+    build,
+    serve: str,
+) -> str:
+    """The artifact store's build-and-promote path (the commit protocol
+    is described once, in ``cdc_makanmana_spark.fs``), shared by
+    `_artifact` and the multi-step streaming replays (q103-q107: stage
+    files → run the streaming query → promote the result).
+
+    The on-disk path is deterministic per (sf_dir, source
+    fingerprints of ``tables``, name, params) and gated on the
+    ``_COMMITTED`` marker. ``build(work_dir)`` stages its inputs,
+    checkpoints and output under a scratch dir unique to this process
+    and call, writing the servable result to ``work_dir/<serve>``; only
+    that subdir is promoted with ``fs.commit`` and the scratch is
+    deleted (stage copies and checkpoints are never retained inside
+    the committed artifact). A concurrent builder of the same
+    fingerprint therefore never touches this build's files, and a
+    committed artifact is never rewritten: a builder that finds one
+    after its build, or loses the promote race to one, serves it. The
+    remaining window is the milliseconds between a promote's rename
+    and its marker.
+
+    Returns the committed path; callers wrap their own read (q104
+    serves merged partials via RollupMaintainer, not a plain scan)."""
+    basename = _artifact_basename(_cache_key(spark, sf_dir, *tables), name, params)
+    path = os.path.join(_artifact_root(), basename)
+    if not fs.is_committed(spark, path):
+        work = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+        try:
+            build(work)
+            if not fs.is_committed(spark, path):
+                fs.delete(spark, path)  # a crashed builder's torn promote
+                try:
+                    fs.commit(spark, os.path.join(work, serve), path)
+                except OSError:
+                    if not fs.is_committed(spark, path):
+                        raise
+        finally:
+            fs.delete(spark, work)
+        _evict_stale_generations(spark, basename)
+    return path
 
 
 def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2563,7 +2607,7 @@ def q40_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference dedups by exact name/id only (dataManager.ts); this
     is the scale-path generalization SURVEY.md §2.8 names."""
     from cdc_makanmana_spark.operators.dedup import (
-        _materialize,
+        materialize,
         winnowing_fingerprint_rows,
     )
 
@@ -2573,7 +2617,7 @@ def q40_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Row-form winnowing (codegen'd gram hashing + window-min — 11x
     # over the interpreted array-HOF form at sf0.1), materialized once
     # for its two consumers (df-count and pair expansion).
-    fps = _materialize(
+    fps = materialize(
         winnowing_fingerprint_rows(
             d, "text", "doc_id", k=_Q40_K, window=_Q40_WIN, gram_hash="md5_64"
         )
@@ -2875,8 +2919,6 @@ def q50_dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch_id is a no-op by the index's own commit protocol), a
         # regenerated corpus or parameter bump gets a new path, and
         # the superseded generation is evicted
-        import os
-
         basename = _artifact_basename(k50, "q50_sigidx", "nh=32,bands=16")
         path = os.path.join(_artifact_root(), basename)
         idx = SignatureIndex(
@@ -4598,11 +4640,11 @@ def q76_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked = label_cell_assign_two_level(
         e, "vec_id", "label", "embedding", cells_per_label=m
     ).withColumn("__blk", F.concat_ws(":", "label", "__cell"))
-    from cdc_makanmana_spark.operators.dedup import _materialize
+    from cdc_makanmana_spark.operators.dedup import materialize
 
     # pairs feed both directions of the symmetric union — cut lineage
     # so the block pipeline (assign + pair + cosine) runs once
-    pairs = _materialize(
+    pairs = materialize(
         embedding_near_duplicates_by_block(
             blocked, "__blk", threshold=-1.0, vec_col="embedding", id_col="vec_id"
         )
@@ -5106,9 +5148,9 @@ def q83_chi2_association(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "lang")
         .agg(F.count(F.lit(1)).cast("double").alias("o"))
     )
-    from cdc_makanmana_spark.operators.dedup import _materialize
+    from cdc_makanmana_spark.operators.dedup import materialize
 
-    cells = _materialize(cells)  # feeds 3 aggregations + the final join
+    cells = materialize(cells)  # feeds 3 aggregations + the final join
     # the grand total attaches as a SCALAR SUBQUERY (planned as a
     # Subquery stage whose 1-row result is injected as a literal — no
     # join operator at all): both the bare cross join and the
@@ -5514,12 +5556,12 @@ def q91_association_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row attach would otherwise plan the banned BNLJ)."""
     from cdc_makanmana_spark.operators.graph import cooccurrence_edges
 
-    from cdc_makanmana_spark.operators.dedup import _materialize
+    from cdc_makanmana_spark.operators.dedup import materialize
 
     # the distinct triple frame feeds three consumers (pair builder,
     # item counts, basket view) — cut lineage so the fact scan +
     # distinct run once (the q87 lesson; census showed 6 scans uncut)
-    t = _materialize(
+    t = materialize(
         _t(spark, sf_dir, "events")
         .select("user_id", F.date_trunc("hour", "ts").alias("w"), "event_type")
         .distinct()
@@ -5730,7 +5772,7 @@ def q94_split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the split is a codegen projection, the audit one groupBy + cell
     re-aggregations (no second fact scan), the total a scalar
     subquery."""
-    from cdc_makanmana_spark.operators.dedup import _materialize, md5_hash64
+    from cdc_makanmana_spark.operators.dedup import materialize, md5_hash64
 
     d = _t(spark, sf_dir, "documents")
     bucket = F.pmod(
@@ -5743,7 +5785,7 @@ def q94_split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "split"
         ),
     )
-    cells = _materialize(
+    cells = materialize(
         s.groupBy("source", "split").agg(F.count(F.lit(1)).cast("double").alias("o"))
     )
     cells.createOrReplaceTempView("q94_cells")
@@ -6126,8 +6168,6 @@ def _cobucketed_orders_lineitem(spark: SparkSession, sf_dir: str) -> tuple[str, 
     serving stale buckets; registration is per-process (catalog
     entries are session-scoped), with the data dirs under the artifact
     root."""
-    import os
-
     from cdc_makanmana_spark.sources.layout import write_bucketed
 
     base = _artifact_basename(
@@ -6290,57 +6330,6 @@ def q102_rangesorted_event_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q103_PARAMS = "keys=user_id,tie=event_id,files=8,mft=2,tomb=1,v2"
 
 
-def _streamed_artifact(
-    spark: SparkSession, sf_dir: str, name: str, params: str, build, serve: str
-) -> str:
-    """Shared build-commit protocol for the streaming replays
-    (q103-q105), mirroring `_artifact` but for multi-step builders
-    (stage files → run the streaming query → promote the result).
-
-    ``build(work_dir)`` stages its inputs, checkpoints, and output
-    under a PROCESS-UNIQUE scratch dir, writing the servable result to
-    ``work_dir/<serve>``; the helper then promotes only that subdir to
-    the committed path with a single `fs.rename` and deletes the
-    scratch (so stage copies and checkpoints are never retained inside
-    the committed artifact). Building in a pid-unique dir means a
-    concurrent builder of the same fingerprint can no longer delete
-    this process's in-flight stage/checkpoint (the torn-commit race a
-    shared dir had); the remaining delete→rename→mark window is
-    milliseconds and write-once idempotent — the same residual
-    `_artifact` documents. If the rename loses that race to an
-    already-committed winner, the winner is served.
-
-    Returns the committed path; callers wrap their own read (q104
-    serves merged partials via RollupMaintainer, not a plain scan)."""
-    import os
-
-    from cdc_makanmana_spark import fs
-
-    basename = _artifact_basename(_cache_key(spark, sf_dir, "events"), name, params)
-    path = os.path.join(_artifact_root(), basename)
-    if not fs.is_committed(spark, path):
-        work = f"{path}.build-{os.getpid()}"
-        fs.delete(spark, work)
-        try:
-            build(work)
-            out = os.path.join(work, serve)
-            if not fs.is_committed(spark, path):
-                fs.delete(spark, path)
-                if not fs.rename(spark, out, path):
-                    # lost the promote race — serve the winner if one
-                    # committed; anything else is a real failure
-                    if not fs.is_committed(spark, path):
-                        raise RuntimeError(
-                            f"promote of {name} artifact to {path} failed"
-                        )
-                else:
-                    fs.mark_committed(spark, path)
-        finally:
-            fs.delete(spark, work)
-        _evict_stale_generations(spark, basename)
-    return path
-
-
 def _events_with_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events fixture as a CDC feed: 'error' events are the key's
     tombstone (the reference domain's closed/expired marker —
@@ -6371,7 +6360,7 @@ def _stream_merged_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path = _streamed_artifact(
-        spark, sf_dir, "stream_merge", _Q103_PARAMS, build, serve="merged"
+        spark, sf_dir, "stream_merge", ("events",), _Q103_PARAMS, build, serve="merged"
     )
     return spark.read.parquet(path)
 
@@ -6443,7 +6432,7 @@ def _stream_rollup_maintainer(spark: SparkSession, sf_dir: str):
         )
 
     path = _streamed_artifact(
-        spark, sf_dir, "stream_rollup", _Q104_PARAMS, build, serve="rollup"
+        spark, sf_dir, "stream_rollup", ("events",), _Q104_PARAMS, build, serve="rollup"
     )
     return RollupMaintainer(spark, path, window="1 hour", keys=["event_type"])
 
@@ -6559,7 +6548,7 @@ def _stream_attribution_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(f"{work}/out").write.parquet(f"{work}/serve")
 
     path = _streamed_artifact(
-        spark, sf_dir, "stream_join", _Q105_PARAMS, build, serve="serve"
+        spark, sf_dir, "stream_join", ("events",), _Q105_PARAMS, build, serve="serve"
     )
     return spark.read.parquet(path)
 
@@ -6650,7 +6639,7 @@ def _stream_asof_answers(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(f"{work}/out").write.parquet(f"{work}/serve")
 
     path = _streamed_artifact(
-        spark, sf_dir, "stream_asof", _Q106_PARAMS, build, serve="serve"
+        spark, sf_dir, "stream_asof", ("events",), _Q106_PARAMS, build, serve="serve"
     )
     return spark.read.parquet(path)
 
@@ -6720,7 +6709,7 @@ def _stream_deduped_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(f"{work}/out").write.parquet(f"{work}/serve")
 
     path = _streamed_artifact(
-        spark, sf_dir, "stream_dedup", _Q107_PARAMS, build, serve="serve"
+        spark, sf_dir, "stream_dedup", ("events",), _Q107_PARAMS, build, serve="serve"
     )
     return spark.read.parquet(path)
 
@@ -7035,14 +7024,14 @@ def q110_multimodal_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators consumed separately re-ran the scan+decode once per
     modality (measured ~5.2 s vs ~3.5 s for the staged fused form)."""
     from cdc_makanmana_spark.multimodal.binary import media_fingerprints_dir
-    from cdc_makanmana_spark.operators.dedup import _materialize, hamming_pairs
+    from cdc_makanmana_spark.operators.dedup import materialize, hamming_pairs
 
     # glob-restrict the scan to this query's modalities: binaryFile
     # lists and READS every file under the dir — without the filter
     # q110 ships q111's video bytes through the scan just to drop
     # them at the kind filter (measured +1.5 s after the Y4M fixtures
     # landed)
-    fps = _materialize(
+    fps = materialize(
         media_fingerprints_dir(
             spark,
             _MEDIA_FIXTURE_DIR,

@@ -79,7 +79,7 @@ def get_spark(app_name: str = "cdc-makanmana-spark") -> SparkSession:
 
 def release_materialized(spark: SparkSession) -> int:
     """Unpersist every persisted RDD in the session — the explicit
-    job-boundary release for ``_materialize``'s ``localCheckpoint``
+    job-boundary release for ``materialize``'s ``localCheckpoint``
     blocks (operators/dedup.py:93).
 
     Checkpoint blocks are NOT dropped by ``spark.catalog.clearCache()``

@@ -23,17 +23,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cdc_makanmana_spark import fs
 
+# the current snapshot plus one prior (reader isolation)
+_KEEP_VERSIONS = 2
+
 
 class SnapshotCache:
     """Versioned parquet snapshots + ``_cache_meta.json`` sidecar
     (count, last_update epoch-seconds, data_version, version).
 
-    Commit protocol (see ``fs.mark_committed``): each ``save`` writes
-    ``{path}/_staging_v{n}``, renames to ``{path}/v{n}``, stamps
-    ``v{n}/_COMMITTED`` LAST, then updates the sidecar. Readers require
-    the marker, so a crash anywhere mid-save leaves the previous
-    committed snapshot live — the round-1 in-place overwrite could tear
-    the only copy. The old version is kept until the next save commits
+    Each ``save`` is a versioned commit (the protocol is described once,
+    in ``cdc_makanmana_spark.fs``): stage ``{path}/_staging_v{n}``,
+    commit it as ``{path}/v{n}``, update the sidecar, then keep the
+    newest two committed snapshots. Readers require the
+    marker, so a crash anywhere mid-save leaves the previous committed
+    snapshot live. The prior version stays until the next save commits
     (reader isolation for lazy plans already handed out).
 
     Version dirs written BEFORE the marker protocol are invisible to
@@ -52,9 +55,6 @@ class SnapshotCache:
     def _read_meta(self) -> dict | None:
         raw = fs.read_text(self.spark, self._meta_path)
         return json.loads(raw) if raw is not None else None
-
-    def _version_numbers(self) -> list[int]:
-        return [n for n, _ in fs.list_versions(self.spark, self.path)]
 
     def _current_path(self) -> str | None:
         """Newest committed snapshot dir (sidecar-preferred), or None."""
@@ -79,16 +79,11 @@ class SnapshotCache:
     def save(self, df: DataFrame, now_s: float | None = None) -> int:
         """Write snapshot + watermark metadata (S5). Returns row count
         (counted once, reused for the stats surface)."""
-        version = max(self._version_numbers(), default=0) + 1
+        version = fs.next_version(self.spark, self.path)
         staged = f"{self.path}/_staging_v{version}"
         final = f"{self.path}/v{version}"
         df.write.mode("overwrite").parquet(staged)
-        if not fs.rename(self.spark, staged, final):
-            raise IOError(
-                f"snapshot commit rename failed: {staged} -> {final} "
-                "(staged data left in place)"
-            )
-        fs.mark_committed(self.spark, final)
+        fs.commit(self.spark, staged, final)
         n = self.spark.read.parquet(final).count()
         fs.write_text(
             self.spark,
@@ -102,20 +97,7 @@ class SnapshotCache:
                 }
             ),
         )
-        # Keep one prior COMMITTED version (reader isolation for lazy
-        # plans already handed out); sweep everything older than it,
-        # committed or torn. Counting torn dirs toward the keep-window
-        # would evict the real prior version while retaining garbage
-        # (the verdict-cache vacuum's committed-only rule, mirrored).
-        committed = [
-            v
-            for v in self._version_numbers()
-            if fs.is_committed(self.spark, f"{self.path}/v{v}")
-        ]
-        floor_v = committed[-2] if len(committed) >= 2 else version
-        for stale in self._version_numbers():
-            if stale < floor_v or stale not in committed:
-                fs.delete(self.spark, f"{self.path}/v{stale}", recursive=True)
+        fs.sweep_versions(self.spark, self.path, _KEEP_VERSIONS)
         return n
 
     def load(self, version: int | None = None) -> DataFrame:
@@ -141,11 +123,7 @@ class SnapshotCache:
 
     def versions(self) -> list[int]:
         """Committed snapshot versions available for time travel."""
-        return [
-            n
-            for n in self._version_numbers()
-            if fs.is_committed(self.spark, f"{self.path}/v{n}")
-        ]
+        return [n for n, _ in fs.committed_versions(self.spark, self.path)]
 
     def load_or_refresh(self, refresh, now_s: float | None = None) -> DataFrame:
         """Stale-while-revalidate entry (T6/EP2): serve the fresh

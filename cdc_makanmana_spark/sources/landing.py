@@ -16,25 +16,20 @@ a missing path raises exactly like a dead endpoint, an empty file
 replays the reference's empty-API-response miss. The policy layer is
 what's under test; the transport is a URI scheme.
 
-Commit protocol (object-store-safe, all metadata ops through
-``cdc_makanmana_spark.fs``):
-
-1. write the annotated snapshot to ``{bronze}/_staging_v{n}``, where
-   n = max(existing ``v*`` directories, sidecar version) + 1 — derived
-   from BOTH so a crash that leaves v{n} on disk with a stale sidecar
-   can never cause version reuse;
-2. rename to ``{bronze}/v{n}`` (atomic on HDFS; a copy on raw S3 —
-   which is why readers never trust the directory alone);
-3. write ``v{n}/_COMMITTED`` — the marker is the LAST data-side step,
-   so a torn copy from a crash mid-(2) is never marker-stamped;
-4. write the ``_landing_meta.json`` sidecar pointing at v{n};
-5. prune versions older than ``keep_versions`` (lineage/rollback
-   window, like the reference's single-slot cache generalized to N).
+Each landing is a versioned commit (the protocol is described once, in
+``cdc_makanmana_spark.fs``): the annotated snapshot is staged at
+``{bronze}/_staging_v{n}``, committed as ``{bronze}/v{n}``, the
+``_landing_meta.json`` sidecar is pointed at it, and the newest
+``keep_versions`` committed versions are kept (the lineage/rollback
+window, like the reference's single-slot cache generalized to N).
+``n`` is one past both the highest ``v*`` dir and the sidecar version,
+so a crash that leaves v{n} on disk with a stale sidecar can never
+cause version reuse.
 
 Readers resolve through the sidecar but REQUIRE the commit marker; if
-the sidecar dangles (crash between 3 and 4) they fall back to the
-newest marker-stamped version — a crash at any step leaves the
-previous committed snapshot live, never a half-landed one.
+the sidecar dangles they fall back to the newest marker-stamped
+version — a crash at any step leaves the previous committed snapshot
+live, never a half-landed one.
 """
 
 from __future__ import annotations
@@ -137,27 +132,17 @@ class LandingJob:
         raw = fs.read_text(self.spark, self._meta_path)
         return json.loads(raw) if raw is not None else None
 
-    def _version_numbers(self) -> list[int]:
-        return [n for n, _ in fs.list_versions(self.spark, self.bronze_path)]
-
-    def _next_version(self) -> int:
-        """max(existing v* dirs, sidecar version) + 1 — NOT sidecar+1
-        alone: after a crash between the v{n} rename and the sidecar
-        write, the sidecar still says n-1 while v{n} exists, and
-        sidecar+1 would try to commit INTO the existing v{n} (raising
-        forever on local fs, silently nesting on HDFS)."""
-        meta = self._read_meta()
-        highest = max(
-            max(self._version_numbers(), default=0),
-            meta["version"] if meta else 0,
-        )
-        return highest + 1
-
     def land(self, now_s: float | None = None) -> LandingResult:
         """One acquisition cycle → one committed bronze version."""
         df, route = self.acquire()
         now = now_s or time.time()
-        version = self._next_version()
+        # one past the sidecar's version too: the dirs on disk alone
+        # under-count once the newest one was swept or removed by hand
+        meta = self._read_meta()
+        version = max(
+            fs.next_version(self.spark, self.bronze_path),
+            meta["version"] + 1 if meta else 1,
+        )
 
         staged = f"{self.bronze_path}/_staging_v{version}"
         final = f"{self.bronze_path}/v{version}"
@@ -165,16 +150,7 @@ class LandingJob:
             "_landed_at", F.lit(now).cast("double")
         ).withColumn("_source_route", F.lit(route))
         annotated.write.mode("overwrite").parquet(staged)
-        fs.mkdirs(self.spark, self.bronze_path)
-        if not fs.rename(self.spark, staged, final):
-            # Fail CLOSED but keep the staged data: deleting it on a
-            # racy/transient rename failure would destroy the only copy
-            # of the freshly-acquired snapshot.
-            raise IOError(
-                f"bronze commit rename failed: {staged} -> {final} "
-                "(staged data left in place)"
-            )
-        fs.mark_committed(self.spark, final)
+        fs.commit(self.spark, staged, final)
         count = self.spark.read.parquet(final).count()
         fs.write_text(
             self.spark,
@@ -188,14 +164,8 @@ class LandingJob:
                 }
             ),
         )
-        self._prune(version)
+        fs.sweep_versions(self.spark, self.bronze_path, self.keep_versions)
         return LandingResult(version, route, count, final, degraded=route < 0)
-
-    def _prune(self, current: int) -> None:
-        floor = current - self.keep_versions
-        for name in fs.list_names(self.spark, self.bronze_path, dirs_only=True):
-            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) <= floor:
-                fs.delete(self.spark, f"{self.bronze_path}/{name}")
 
     def read_bronze(self) -> DataFrame | None:
         """Current committed snapshot: sidecar-resolved, but only a

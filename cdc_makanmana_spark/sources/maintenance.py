@@ -1,22 +1,23 @@
-"""Table maintenance: small-file compaction.
+"""Table maintenance: small-file compaction and row scrubs.
 
 Streaming sinks (foreachBatch appends, availableNow micro-batches) and
 high-parallelism writers accumulate many small files; at 100 TB the
 resulting scan-planning and NameNode/liststore pressure dominates query
 latency long before data volume does. ``compact_parquet`` rewrites a
-directory to ~``target_file_bytes`` files using the same
-staging → rename → ``_COMMITTED`` discipline as the MVCC sinks
-(fs.py:126), with explicit crash-window repair so a killed compaction
-never loses the table.
+directory to ~``target_file_bytes`` files and ``scrub_rows`` hard-deletes
+rows; both install the rewrite with the two-rename swap of the engine's
+commit protocol (``fs.swap_in``, described once in
+``cdc_makanmana_spark.fs``), and ``repair`` heals every crash window,
+so a killed rewrite never loses the table.
 
 Reference analogue: the cache rewrite-in-place the reference performs on
 every refresh (src/services/dataManager.ts:68-77) — generalized to a
 maintenance operation. Readers never see a torn MIX of old and new
-files, but the two-rename swap does leave a brief window where the
-directory is absent (generic filesystems have no atomic directory
-swap): run compaction in the ingest pause of a maintenance window, or
-point readers through a versioned layout (LandingJob) where the swap
-problem disappears entirely.
+files, but the swap does leave a brief window where the directory is
+absent (generic filesystems have no atomic directory swap): run these in
+the ingest pause of a maintenance window, or point readers through a
+versioned layout (LandingJob) where the swap problem disappears
+entirely.
 """
 
 from __future__ import annotations
@@ -52,32 +53,12 @@ def _data_files(spark: SparkSession, path: str) -> list[str]:
 
 
 def repair(spark: SparkSession, path: str) -> str:
-    """Repair the crash windows of a previous ``compact_parquet``:
-
-    - swap completed staging in if the table directory is the hole
-      (crash between the two renames, staged data committed);
-    - roll the original back if staging never committed;
-    - sweep stale staging/old leftovers otherwise.
-
-    Returns one of 'clean', 'finished_swap', 'rolled_back', 'swept'.
-    """
+    """Repair the crash windows of a previous ``compact_parquet`` or
+    ``scrub_rows`` (``fs.repair_swap``): finish the swap from committed
+    staging, roll the original back, or sweep leftovers. Returns one of
+    'clean', 'finished_swap', 'rolled_back', 'swept'."""
     p = path.rstrip("/")
-    staging, old = p + _STAGING, p + _OLD
-    if not fs.exists(spark, p):
-        if fs.exists(spark, staging) and fs.is_committed(spark, staging):
-            fs.rename(spark, staging, p)
-            fs.delete(spark, old)
-            return "finished_swap"
-        if fs.exists(spark, old):
-            fs.rename(spark, old, p)
-            fs.delete(spark, staging)
-            return "rolled_back"
-    swept = False
-    for leftover in (staging, old):
-        if fs.exists(spark, leftover):
-            fs.delete(spark, leftover)
-            swept = True
-    return "swept" if swept else "clean"
+    return fs.repair_swap(spark, p, p + _STAGING, p + _OLD)
 
 
 def compact_parquet(
@@ -92,12 +73,11 @@ def compact_parquet(
     at or under the target — safe to schedule unconditionally after
     every streaming ingest window.
 
-    Protocol: write the repartitioned copy to a staging sibling, mark
-    it ``_COMMITTED`` (readers of the staging path ignore torn dirs,
-    same rule as the MVCC sinks), then swap via two renames keeping the
-    original as ``.__compact_old`` until the new directory is in place.
-    Every crash window is recoverable by :func:`repair`, which runs
-    first on each invocation.
+    Protocol: write the repartitioned copy to ``.__compact_staging``,
+    then install it with ``fs.swap_in`` (the original is kept as
+    ``.__compact_old`` until the new directory is in place). Every
+    crash window is recoverable by :func:`repair`, which runs first on
+    each invocation.
 
     ``verify_counts`` re-counts the staged copy before the swap and
     aborts (deleting staging, original untouched) on any mismatch —
@@ -129,7 +109,7 @@ def compact_parquet(
             raise RuntimeError(
                 f"compaction aborted: staged count {n_staged} != source {n_before}"
             )
-    _swap_in(spark, p, staging, old, what="compaction")
+    fs.swap_in(spark, p, staging, old)
     return {
         "compacted": True,
         "files": len(names),
@@ -137,31 +117,6 @@ def compact_parquet(
         "target_files": n_target,
         "rows": n_before,
     }
-
-
-def _swap_in(
-    spark: SparkSession, p: str, staging: str, old: str, what: str
-) -> None:
-    """Install a fully-staged rewrite at ``p`` via the two-rename swap:
-    mark staging ``_COMMITTED``, move the original aside, move staging
-    in, drop the original. Every crash window is recoverable by
-    :func:`repair` (the marker is what tells repair the staged copy is
-    whole). Hadoop rename returns False instead of raising; every
-    failure must fail CLOSED with the original data reachable (directly
-    or via repair()), never delete-and-report-success."""
-    fs.mark_committed(spark, staging)
-    fs.delete(spark, old)
-    if not fs.rename(spark, p, old):
-        fs.delete(spark, staging)
-        raise RuntimeError(f"{what} aborted: could not move {p} aside")
-    if not fs.rename(spark, staging, p):
-        rolled_back = fs.rename(spark, old, p)
-        raise RuntimeError(
-            f"{what} failed installing the rewritten copy at {p}; "
-            + ("original restored" if rolled_back else
-               "original preserved at " + old + " (run repair())")
-        )
-    fs.delete(spark, old)
 
 
 def scrub_rows(
@@ -175,11 +130,10 @@ def scrub_rows(
     value appears in ``keys`` — the right-to-be-forgotten / takedown
     primitive (user ids to erase, licensed doc ids to pull from a
     training corpus). Rewrites the table via broadcast left_anti join
-    using the same staging → ``_COMMITTED`` → two-rename-swap protocol
-    as :func:`compact_parquet`; every crash window is recoverable by
-    :func:`repair` (which runs first), and a count reconciliation
-    (kept + matched == before) aborts the swap — the original table is
-    untouched on ANY failure.
+    using the same staged two-rename swap as :func:`compact_parquet`;
+    every crash window is recoverable by :func:`repair` (which runs
+    first), and a count reconciliation (kept + matched == before)
+    aborts the swap — the original table is untouched on ANY failure.
 
     Scale shape: the delete set is broadcast (erasure requests are tiny
     against a 100 TB corpus), so the rewrite is one full scan + write
@@ -217,7 +171,7 @@ def scrub_rows(
             f"scrub aborted: staged {n_staged} + matched {n_matched} "
             f"!= source {n_before}; original untouched"
         )
-    _swap_in(spark, p, staging, old, what="scrub")
+    fs.swap_in(spark, p, staging, old)
     return {
         "rows_before": n_before,
         "rows_scrubbed": n_matched,

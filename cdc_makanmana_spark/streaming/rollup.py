@@ -17,9 +17,10 @@ from the engine's existing write-once commit-marker discipline:
   touched (window, key), so the serve-side input is bounded by
   windows x keys x batches, not by event count;
 - ``compact()`` folds all committed partials into one base partial
-  (same staged two-rename swap as sources/maintenance.py), bounding
-  the serve-side union for long-running streams. Crash windows heal
-  on the next compact()/serve() via the dot-prefixed staging rule.
+  (the manifest fold of the engine's commit protocol, described once
+  in ``cdc_makanmana_spark.fs``), bounding the serve-side union for
+  long-running streams. Crash windows heal on the next
+  compact()/serve() via the dot-prefixed staging rule.
 
 Additive measures only (count, sum — avg is served as sum/count,
 and optionally a Datasketches HLL sketch for distinct counts — a
@@ -47,7 +48,7 @@ from pyspark.sql.types import DecimalType
 from cdc_makanmana_spark import fs
 
 _STAGING = ".__rollup_compact"
-_MANIFEST = "_FOLDED"
+_MANIFEST = fs.FOLD_MANIFEST
 
 
 class RollupMaintainer:
@@ -128,31 +129,14 @@ class RollupMaintainer:
 
     # ---- reads -------------------------------------------------------------
 
-    def _heal(self, root: str, names: list[str]) -> list[str]:
-        """Finish or roll back a crashed compact(). A committed staging
-        dir carries a manifest naming exactly the partial dirs it
-        folded; healing deletes any of those still present (they are
-        double-counted the moment staging serves) and installs staging
-        as the new base. Uncommitted staging is swept — the originals
-        still serve."""
-        staging = f"{root}/{_STAGING}"
-        if _STAGING in names:
-            manifest = fs.read_text(self.spark, f"{staging}/{_MANIFEST}")
-            if fs.is_committed(self.spark, staging) and manifest is not None:
-                for n in manifest.split("\n"):
-                    if n:
-                        fs.delete(self.spark, f"{root}/{n}")
-                fs.rename(self.spark, staging, f"{root}/base")
-            else:
-                fs.delete(self.spark, staging)
-            names = fs.list_names(self.spark, root, dirs_only=True)
-        return names
-
     def _partial_dirs(self) -> list[str]:
         root = f"{self.path}/partials"
         if not fs.exists(self.spark, root):
             return []
-        names = self._heal(root, fs.list_names(self.spark, root, dirs_only=True))
+        names = fs.list_names(self.spark, root, dirs_only=True)
+        if _STAGING in names:  # a crashed compact(): finish or sweep it
+            fs.heal_fold(self.spark, f"{root}/{_STAGING}", f"{root}/base")
+            names = fs.list_names(self.spark, root, dirs_only=True)
         return sorted(
             f"{root}/{n}"
             for n in names
@@ -258,11 +242,11 @@ class RollupMaintainer:
     def compact(self) -> int:
         """Fold all committed partials into one ``base`` partial (the
         long-running stream's serve-side union would otherwise grow one
-        dir per micro-batch). Staged swap: write the merged partial to
-        a dot-prefixed staging dir (invisible to readers), mark it,
-        delete the inputs, then rename into place; a crash anywhere is
-        healed by ``_heal`` on the next read. Returns the number of
-        partial dirs folded (0 = nothing to do)."""
+        dir per micro-batch). The merged partial is written to a
+        dot-prefixed staging dir (invisible to readers) and installed
+        with ``fs.install_fold``; a crash anywhere is healed on the
+        next read. Returns the number of partial dirs folded (0 =
+        nothing to do)."""
         dirs = self._partial_dirs()
         if len(dirs) <= 1:
             return 0
@@ -281,18 +265,10 @@ class RollupMaintainer:
             .agg(*aggs)
         )
         merged.write.mode("overwrite").parquet(staging)
-        # manifest BEFORE the marker: a committed staging must always
-        # know which inputs it folded, or a crash mid-deletion would
-        # leave some of them alive next to the installed base —
-        # double-counted. With the manifest, _heal finishes the
-        # deletions idempotently before installing.
-        fs.write_text(
+        fs.install_fold(
             self.spark,
-            f"{staging}/{_MANIFEST}",
+            staging,
+            f"{root}/base",
             "\n".join(d.rsplit("/", 1)[1] for d in dirs),
         )
-        fs.mark_committed(self.spark, staging)
-        for d in dirs:
-            fs.delete(self.spark, d)
-        fs.rename(self.spark, staging, f"{root}/base")
         return len(dirs)

@@ -36,23 +36,16 @@ class VerdictCache:
         self.key_col = key_col
         self.ttl_hours = ttl_hours
 
-    # MVCC layout: each merge writes a NEW ``v{n}`` subdirectory and old
-    # versions stay on disk, so a lazy DataFrame planned against version
-    # n still reads valid files after a merge commits n+1 (the same
+    # MVCC layout: each merge is a versioned commit of a NEW ``v{n}``
+    # subdirectory (the protocol is described once, in
+    # ``cdc_makanmana_spark.fs``) and old versions stay on disk until
+    # ``vacuum``, so a lazy DataFrame planned against version n still
+    # reads valid files after a merge commits n+1 (the same
     # reader-isolation guarantee a Delta/Iceberg log provides). Without
     # this, enrich_with's returned (lazy) plan would dangle on files the
-    # merge just deleted. Version discovery/commit/vacuum go through the
-    # Hadoop FileSystem API, so ``path`` may live on any object store.
-    # Readers only trust versions stamped with the ``_COMMITTED`` marker
-    # (fs.mark_committed, written LAST): on stores where rename is a
-    # copy, a crash mid-commit leaves a torn un-stamped directory that
-    # must never shadow the previous good version.
-    def _versions(self, committed_only: bool = True) -> list[str]:
-        return [
-            name
-            for _, name in fs.list_versions(self.spark, self.path)
-            if not committed_only or fs.is_committed(self.spark, f"{self.path}/{name}")
-        ]
+    # merge just deleted. Readers only trust marker-stamped versions.
+    def _versions(self) -> list[str]:
+        return [name for _, name in fs.committed_versions(self.spark, self.path)]
 
     def _current(self) -> str | None:
         return fs.newest_committed(self.spark, self.path)
@@ -117,32 +110,18 @@ class VerdictCache:
             )
         else:
             merged = stamped
-        # Next version = max over ALL v* dirs (committed or torn) + 1,
-        # never len(): vacuum shrinks the list and a torn dir from a
-        # crashed commit still occupies its number — both would cause
-        # number reuse under len()-based naming.
-        all_vs = self._versions(committed_only=False)
-        n = max((int(v[1:]) for v in all_vs), default=0)
-        # Write then rename within the same parent, then stamp the
-        # commit marker LAST — concurrent readers of version <= n are
-        # untouched, and a crash before the stamp leaves an un-stamped
-        # directory that readers ignore.
-        tmp = f"{self.path}/.__tmp_v{n + 1:06d}"
-        final = f"{self.path}/v{n + 1:06d}"
+        n = fs.next_version(self.spark, self.path)
+        tmp = f"{self.path}/.__tmp_v{n:06d}"
+        final = f"{self.path}/v{n:06d}"
         merged.write.mode("overwrite").parquet(tmp)
-        if not fs.rename(self.spark, tmp, final):
-            raise IOError(f"verdict-cache commit rename failed: {tmp} -> {final}")
-        fs.mark_committed(self.spark, final)
+        fs.commit(self.spark, tmp, final)
 
     def vacuum(self, keep: int = 2) -> None:
         """Drop all but the newest ``keep`` committed versions, plus any
         torn (un-stamped) directories left by crashed commits. Callers
         must ensure no live query still reads the dropped ones (same
         contract as Delta VACUUM). Single-writer assumed, as throughout."""
-        keep_set = set(self._versions()[-keep:])
-        for d in self._versions(committed_only=False):
-            if d not in keep_set:
-                fs.delete(self.spark, f"{self.path}/{d}", recursive=True)
+        fs.sweep_versions(self.spark, self.path, keep)
 
     def enrich_with(
         self,

@@ -3,7 +3,8 @@
 - build-once within a process (dict hit),
 - cross-process reuse via the on-disk _COMMITTED marker,
 - invalidation when a source table is regenerated (stat_token change),
-- an unmarked (crashed mid-build) directory is rebuilt, not served.
+- an unmarked (crashed mid-build) directory is rebuilt, not served,
+- a committed artifact is never rewritten.
 """
 
 import pytest
@@ -230,3 +231,33 @@ def test_artifact_unmarked_dir_is_rebuilt(spark, tmp_path):
     Q._artifact(spark, sf, "unit_t3", ("documents",), build)
     assert len(calls) == 2
     assert fs.is_committed(spark, path)
+
+
+def test_artifact_never_rewrites_a_committed_winner(spark, tmp_path):
+    """A build that re-enters ``_artifact`` for its own key commits the
+    artifact from the inner call; the outer call must then serve that
+    winner and leave its files untouched, not overwrite it in place."""
+    import os
+
+    sf = str(tmp_path)
+    (tmp_path / "documents.parquet").write_bytes(b"generation-1")
+    parts = []
+
+    def inner_build():
+        return spark.range(3).toDF("id")
+
+    def outer_build():
+        df = Q._artifact(spark, sf, "unit_t5", ("documents",), inner_build)
+        path = next(p for (_, n, _), p in Q._ARTIFACTS.items() if n == "unit_t5")
+        parts.append((path, sorted(os.listdir(path))))
+        return spark.range(5).toDF("id")
+
+    out = Q._artifact(spark, sf, "unit_t5", ("documents",), outer_build)
+    path, inner_parts = parts[0]
+    assert any(n.startswith("part-") for n in inner_parts)
+    assert sorted(os.listdir(path)) == inner_parts
+    assert out.count() == 3  # the committed winner is what is served
+    root = Q._artifact_root()
+    assert [n for n in os.listdir(root) if n.startswith("unit_t5_")] == [
+        os.path.basename(path)
+    ]  # no scratch dir left behind

@@ -1380,7 +1380,7 @@ def test_release_materialized_drops_checkpoint_blocks(spark):
     session fully usable for new queries."""
     from pyspark.sql import functions as F
 
-    from cdc_makanmana_spark.operators.dedup import _materialize
+    from cdc_makanmana_spark.operators.dedup import materialize as _materialize
     from cdc_makanmana_spark.session import release_materialized
 
     df = _materialize(spark.range(1000).withColumn("k", F.col("id") % 7))

@@ -303,6 +303,58 @@ def test_landing_job_crash_window_recovery(spark, tmp_path):
     assert job.read_bronze().collect()[0].id == "m4"
 
 
+def test_landing_job_sweeps_torn_version_outside_keep_window(spark, tmp_path):
+    """The keep-window counts COMMITTED versions: a torn v{n} left by a
+    crashed land() is swept and must not take a slot, or the real prior
+    version would be evicted while the garbage survives."""
+    from cdc_makanmana_spark import fs
+    from cdc_makanmana_spark.sources import LandingJob, read_json_source
+
+    src = tmp_path / "src.jsonl"
+    schema = StructType(
+        [StructField("id", StringType()), StructField("name", StringType())]
+    )
+    bronze = str(tmp_path / "bronze")
+    job = LandingJob(
+        spark,
+        routes=[lambda: read_json_source(spark, str(src), schema)],
+        schema=schema,
+        bronze_path=bronze,
+        retries=1,
+        backoff_s=(0.0,),
+        keep_versions=2,
+    )
+    for i in (1, 2):
+        src.write_text(f'{{"id": "m{i}", "name": "gen{i}"}}\n')
+        assert job.land(now_s=float(i)).version == i
+    # torn v3: renamed into place, never stamped
+    spark.createDataFrame([("tx", "torn")], schema).write.parquet(f"{bronze}/v3")
+    src.write_text('{"id": "m4", "name": "gen4"}\n')
+    assert job.land(now_s=4.0).version == 4
+
+    names = sorted(fs.list_names(spark, bronze, dirs_only=True))
+    assert names == ["v2", "v4"]  # torn v3 swept, prior committed v2 kept
+    assert all(fs.is_committed(spark, f"{bronze}/{n}") for n in names)
+    assert job.read_bronze().collect()[0].id == "m4"
+
+
+def test_only_fs_renames():
+    """The directory-commit protocol lives in ``fs`` alone: no other
+    package module may rename a directory into visibility by hand."""
+    import pathlib
+    import re
+
+    import cdc_makanmana_spark
+
+    pkg = pathlib.Path(cdc_makanmana_spark.__file__).parent
+    offenders = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if p.name != "fs.py" and re.search(r"\bfs\.rename\(", p.read_text())
+    ]
+    assert offenders == []
+
+
 def test_snapshot_cache_crash_leaves_previous_version_readable(spark, tmp_path):
     """A torn save (staging written, rename/marker never completed)
     must leave the previous committed snapshot served by load(); a
