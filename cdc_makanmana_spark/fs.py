@@ -37,7 +37,7 @@ then mark it. Every other commit takes one of four shapes:
   ``v{n}`` — a torn dir never takes a slot in the keep-window. Readers
   resolve with :func:`newest_committed`.
 - **Promote a built dir** (the build-artifact store,
-  ``plans.queries._streamed_artifact``): build in a process-unique
+  ``artifacts.streamed_artifact``): build in a process-unique
   scratch dir, :func:`commit` the servable subdir to the deterministic
   artifact path; a builder that loses the promote race serves the
   winner. A committed artifact is never rewritten.

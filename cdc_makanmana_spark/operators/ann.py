@@ -813,6 +813,8 @@ def pq_train(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    from cdc_makanmana_spark.operators.dedup import materialize
+
     dim = resolve_dim(df, vec_col, dim)
     if dim % m:
         raise ValueError(f"dim {dim} not divisible into {m} subspaces")
@@ -823,7 +825,8 @@ def pq_train(
         else df
     )
     fit_src = fit_src.select(F.col(vec_col).cast("array<double>").alias("__v"))
-    fit_src = _materialize_for_fit(fit_src)
+    # m k-means fits consume the same (sampled) frame: cut lineage once
+    fit_src = materialize(fit_src)
     books = []
     for s in range(m):
         feat = fit_src.withColumn(
@@ -834,12 +837,6 @@ def pq_train(
             [list(map(float, c)) for c in km.fit(feat).clusterCenters()]
         )
     return books
-
-
-def _materialize_for_fit(df: DataFrame) -> DataFrame:
-    """m k-means fits consume the same (sampled) frame; cut lineage
-    once so the sample is not recomputed per subspace."""
-    return df.localCheckpoint(eager=True)
 
 
 def pq_seed_codebooks(

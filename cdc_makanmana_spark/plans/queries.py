@@ -14,13 +14,17 @@ Conventions that keep the diff stable:
 from __future__ import annotations
 
 import os
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_makanmana_spark import fs
+# the artifact store (`cdc_makanmana_spark.artifacts`); the store's two
+# entry points stay module-level names here, called bare, so one
+# rebinding of either reaches every call site
+from cdc_makanmana_spark.artifacts import artifact as _artifact
+from cdc_makanmana_spark.artifacts import memo, self_committed_dir
+from cdc_makanmana_spark.artifacts import streamed_artifact as _streamed_artifact
 from cdc_makanmana_spark.functions.geo import haversine_km
 from cdc_makanmana_spark.functions.text import (
     clean_name,
@@ -1790,177 +1794,6 @@ def _q37_ctes() -> str:
 _Q37_CTES = _q37_ctes()
 
 
-# Materialized build artifacts, path-cached per table dir (the
-# q39/q50 build-artifact pattern: cache the parquet PATH, never a live
-# DataFrame — a DataFrame pins the building SparkSession). A real
-# pipeline computes the candidate-pair manifest / cluster map / graph
-# edge list ONCE per corpus snapshot; every downstream consumer reads
-# the artifact — re-running the blocked pair join or the co-occurrence
-# pairing per report would re-shuffle the 100 TB corpus for identical
-# bytes. First call builds and pays the cost; later calls read. The
-# queries that DECLARE the construction itself (q24 pairs, q74 edges)
-# never touch these caches — they stay on the measured surface; the
-# artifacts serve the families built ON TOP of the products
-# (q37/q67/q95 on pairs, q75/q77/q87 on edges).
-_ARTIFACTS: dict[tuple[str, str, str], str] = {}
-
-
-def _cache_key(spark: SparkSession, sf_dir: str, *tables: str) -> tuple[str, str]:
-    """Cache key for anything derived from ``tables`` under ``sf_dir``:
-    folds in a mtime:size token per source table (fs.stat_token), so
-    regenerating the data invalidates every derived cache entry — a
-    bare sf_dir key would silently serve artifacts built from the
-    previous generation of the files."""
-    token = ";".join(
-        f"{t}={fs.stat_token(spark, f'{sf_dir}/{t}.parquet')}" for t in tables
-    )
-    return (sf_dir, token)
-
-
-def _artifact_root() -> str:
-    """Root directory for committed build artifacts. Override with
-    $CDC_ARTIFACT_DIR. The default is PER-USER (XDG cache dir, falling
-    back to a uid-suffixed temp path when there is no home): a fixed
-    world-writable path under the shared system temp dir would let
-    another user on a multi-user host pre-plant or poison committed
-    artifacts that queries then serve as results — the _COMMITTED
-    marker proves write completion, not write provenance."""
-    import tempfile
-
-    override = os.environ.get("CDC_ARTIFACT_DIR")
-    if override:
-        return override
-    home = os.path.expanduser("~")
-    if home and home != "~":
-        cache = os.environ.get("XDG_CACHE_HOME", os.path.join(home, ".cache"))
-        return os.path.join(cache, "cdc_makanmana_artifacts")
-    return os.path.join(
-        tempfile.gettempdir(), f"cdc_makanmana_artifacts_{os.getuid()}"
-    )
-
-
-def _artifact_basename(key: tuple[str, str], name: str, params: str) -> str:
-    """On-disk dir name ``{name}_{sfhash}_{digest}`` — the single
-    definition both the generic artifacts and the q50 signature index
-    derive their path from. The digest folds (sf_dir, source stat
-    tokens, build params); ``params`` must capture every constant that
-    changes the artifact's CONTENT (thresholds, band/bit counts,
-    top-m, ...): source fingerprints alone would keep serving a
-    committed artifact built by older code after a parameter bump.
-    The separate sfhash segment scopes stale-generation eviction to
-    one sf_dir — artifacts for other sf_dirs keep living side by
-    side."""
-    import hashlib
-
-    sfhash = hashlib.md5(key[0].encode()).hexdigest()[:6]
-    digest = hashlib.md5("|".join((*key, params)).encode()).hexdigest()[:16]
-    return f"{name}_{sfhash}_{digest}"
-
-
-def _evict_stale_generations(spark: SparkSession, keep_basename: str):
-    """Drop committed artifact dirs sharing ``keep_basename``'s
-    (name, sfhash) prefix but not its digest — superseded source
-    generations / parameter sets of the SAME sf_dir. Bounds on-disk
-    growth at one artifact per (name, sf_dir) (the old per-process
-    mkdtemp grew per PROCESS; fingerprinted paths would otherwise grow
-    per data generation)."""
-    root = _artifact_root()
-    prefix = keep_basename.rsplit("_", 1)[0] + "_"
-    for child in fs.list_names(spark, root, dirs_only=True):
-        # spare the kept generation AND any live builder's scratch of
-        # that same generation (`<basename>.build-<pid>-<rand>`,
-        # _streamed_artifact) — evicting it would tear a concurrent
-        # build; scratch dirs of SUPERSEDED generations still go
-        if child.startswith(prefix) and not child.startswith(keep_basename):
-            fs.delete(spark, f"{root}/{child}")
-
-
-def _artifact(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    tables: tuple[str, ...],
-    build,
-    params: str = "",
-) -> DataFrame:
-    """Build-once/read-many parquet artifact: `build()` runs on the
-    first request for this (sf_dir, name, source-fingerprint); every
-    later request is a plain parquet scan (its own lineage root — no
-    localCheckpoint blocks to release, no session pinning).
-
-    The in-process dict cache around :func:`_streamed_artifact`, which
-    owns the on-disk store: the cache key folds in a mtime:size
-    fingerprint of the source ``tables`` (fs.stat_token), so
-    regenerating the data under the same sf_dir invalidates the
-    artifact instead of silently serving stale bytes, and a committed
-    artifact is reused by later PROCESSES, never rewritten."""
-    basename = _artifact_basename(_cache_key(spark, sf_dir, *tables), name, params)
-    key = (sf_dir, name, basename)
-    path = _ARTIFACTS.get(key)
-    if path is None:
-        def build_into(work: str) -> None:
-            build().write.mode("overwrite").parquet(f"{work}/out")
-
-        path = _streamed_artifact(
-            spark, sf_dir, name, tables, params, build_into, serve="out"
-        )
-        # superseded in-memory entries for the same (sf_dir, name) can
-        # never be hit again (their token changed) — drop them
-        for k in [k for k in _ARTIFACTS if k[0] == sf_dir and k[1] == name]:
-            del _ARTIFACTS[k]
-        _ARTIFACTS[key] = path
-    return spark.read.parquet(path)
-
-
-def _streamed_artifact(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    tables: tuple[str, ...],
-    params: str,
-    build,
-    serve: str,
-) -> str:
-    """The artifact store's build-and-promote path (the commit protocol
-    is described once, in ``cdc_makanmana_spark.fs``), shared by
-    `_artifact` and the multi-step streaming replays (q103-q107: stage
-    files → run the streaming query → promote the result).
-
-    The on-disk path is deterministic per (sf_dir, source
-    fingerprints of ``tables``, name, params) and gated on the
-    ``_COMMITTED`` marker. ``build(work_dir)`` stages its inputs,
-    checkpoints and output under a scratch dir unique to this process
-    and call, writing the servable result to ``work_dir/<serve>``; only
-    that subdir is promoted with ``fs.commit`` and the scratch is
-    deleted (stage copies and checkpoints are never retained inside
-    the committed artifact). A concurrent builder of the same
-    fingerprint therefore never touches this build's files, and a
-    committed artifact is never rewritten: a builder that finds one
-    after its build, or loses the promote race to one, serves it. The
-    remaining window is the milliseconds between a promote's rename
-    and its marker.
-
-    Returns the committed path; callers wrap their own read (q104
-    serves merged partials via RollupMaintainer, not a plain scan)."""
-    basename = _artifact_basename(_cache_key(spark, sf_dir, *tables), name, params)
-    path = os.path.join(_artifact_root(), basename)
-    if not fs.is_committed(spark, path):
-        work = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        try:
-            build(work)
-            if not fs.is_committed(spark, path):
-                fs.delete(spark, path)  # a crashed builder's torn promote
-                try:
-                    fs.commit(spark, os.path.join(work, serve), path)
-                except OSError:
-                    if not fs.is_committed(spark, path):
-                        raise
-        finally:
-            fs.delete(spark, work)
-        _evict_stale_generations(spark, basename)
-    return path
-
-
 def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q24-parameter blocked n-gram Jaccard pairs (id_a, id_b, jaccard)
     as a materialized build artifact — the candidate-pair manifest of
@@ -2057,9 +1890,6 @@ def q38_salted_supplier_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q39_INDEX_CACHE: dict[tuple[str, str], list[list[float]]] = {}
-
-
 @query(
     "q39_ann_ivf_topk",
     f"""
@@ -2088,11 +1918,10 @@ def q39_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_makanmana_spark.operators.ann import cosine_topk_ivf, ivf_train
 
     e = _t(spark, sf_dir, "embeddings")
-    k39 = _cache_key(spark, sf_dir, "embeddings")
-    centers = _Q39_INDEX_CACHE.get(k39)
-    if centers is None:
-        centers = ivf_train(e, n_cells=8, sample_fraction=0.5)
-        _Q39_INDEX_CACHE[k39] = centers
+    centers = memo(
+        spark, sf_dir, "q39_ivf_centers", ("embeddings",),
+        lambda: ivf_train(e, n_cells=8, sample_fraction=0.5),
+    )
     return cosine_topk_ivf(e, _QUERY_VEC, k=10, n_cells=8, n_probe=8, centers=centers)
 
 
@@ -2674,7 +2503,6 @@ def q40_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fine(sqrt m) cuts it to N x 2*sqrt(m) with the same seed/tie
 # discipline replayed in the oracle.
 _Q48_TARGET_BLOCK = 64
-_Q48_M_CACHE: dict[tuple[str, str], int] = {}
 
 def _q48_cells_per_label(spark: SparkSession, sf_dir: str, e) -> int:
     """Quantizer cells per label for the composite (label x cell)
@@ -2684,13 +2512,11 @@ def _q48_cells_per_label(spark: SparkSession, sf_dir: str, e) -> int:
     builder so the two can never block differently."""
     import math
 
-    k48 = _cache_key(spark, sf_dir, "embeddings")
-    m = _Q48_M_CACHE.get(k48)
-    if m is None:
+    def compute() -> int:
         n, n_labels = e.agg(F.count("*"), F.count_distinct("label")).first()
-        m = max(1, math.ceil(n / (n_labels * _Q48_TARGET_BLOCK)))
-        _Q48_M_CACHE[k48] = m
-    return m
+        return max(1, math.ceil(n / (n_labels * _Q48_TARGET_BLOCK)))
+
+    return memo(spark, sf_dir, "q48_cells_per_label", ("embeddings",), compute)
 
 
 # Two-level (coarse -> fine) replay of ann.label_cell_assign_two_level:
@@ -2885,17 +2711,10 @@ _Q50_ORACLE = r"""
 
 
 # corpus signature index per sf_dir — a BUILD ARTIFACT like q39's IVF
-# centers: the steady-state ingest cost is the measured one; the
-# one-time corpus indexing is paid on first call (min-of-3 reports the
-# served path). SignatureIndex.dedup_batch reranks over xxhash64'd
-# shingle sets — equal to the oracle's string-shingle Jaccard modulo
-# 64-bit hash collisions. The cache stores the index PATH, not the
-# SignatureIndex object: the object pins the building SparkSession,
-# and serving a later session a handle on a stopped context is the
-# trap every other per-sf_dir cache here avoids by storing plain data.
-_Q50_INDEX_CACHE: dict[tuple[str, str], str] = {}
-
-
+# centers: the one-time corpus indexing is paid on first call, the
+# steady-state ingest is the measured cost. SignatureIndex.dedup_batch
+# reranks over xxhash64'd shingle sets — equal to the oracle's
+# string-shingle Jaccard modulo 64-bit hash collisions.
 @query("q50_dedup_incremental_batch", _Q50_ORACLE)
 def q50_dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Growing-corpus ingestion: dedup the new batch (every 4th doc)
@@ -2910,28 +2729,19 @@ def q50_dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars", "text")
     batch = d.filter(F.pmod("doc_id", F.lit(4)) == 3)
-    k50 = _cache_key(spark, sf_dir, "documents")
-    path = _Q50_INDEX_CACHE.get(k50)
-    if path is None:
-        # deterministic per-source-fingerprint path (shared scheme:
-        # _artifact_basename): later processes reopen the built index
-        # instead of rebuilding (append of an already-committed
-        # batch_id is a no-op by the index's own commit protocol), a
-        # regenerated corpus or parameter bump gets a new path, and
-        # the superseded generation is evicted
-        basename = _artifact_basename(k50, "q50_sigidx", "nh=32,bands=16")
-        path = os.path.join(_artifact_root(), basename)
-        idx = SignatureIndex(
+
+    def index(path: str) -> SignatureIndex:
+        return SignatureIndex(
             spark, path, text_col="text", id_col="doc_id", num_hashes=32, bands=16
         )
-        idx.append(d.filter(F.pmod("doc_id", F.lit(4)) != 3), batch_id=0)
-        _evict_stale_generations(spark, basename)
-        _Q50_INDEX_CACHE[k50] = path
-    else:
-        idx = SignatureIndex(
-            spark, path, text_col="text", id_col="doc_id", num_hashes=32, bands=16
-        )
-    return idx.dedup_batch(batch, threshold=0.8).select("doc_id", "n_chars")
+
+    corpus = d.filter(F.pmod("doc_id", F.lit(4)) != 3)
+    path = self_committed_dir(
+        spark, sf_dir, "q50_sigidx", ("documents",),
+        lambda p: index(p).append(corpus, batch_id=0),
+        params="nh=32,bands=16",
+    )
+    return index(path).dedup_batch(batch, threshold=0.8).select("doc_id", "n_chars")
 
 
 @query(
@@ -2979,7 +2789,6 @@ def q51_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # libm drift. Query terms are fixture-vocabulary words present at every
 # sf.
 _Q52_TERMS = ("window", "column", "scan")
-_Q52_STATS_CACHE: dict[tuple[str, str], tuple[int, int]] = {}
 
 _Q52_ORACLE = rf"""
     WITH d AS (
@@ -3020,16 +2829,17 @@ def q52_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_makanmana_spark.operators.search import _norm_split, bm25_rank
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    k52 = _cache_key(spark, sf_dir, "documents")
-    stats = _Q52_STATS_CACHE.get(k52)
-    if stats is None:
+
+    def corpus_stats() -> tuple[int, int]:
         base = (
             d.filter(F.col("text").isNotNull())
             .select(_norm_split(F.col("text")).alias("__w"))
             .filter(F.col("__w") != F.array(F.lit("")))
         )
         n, tdl = base.agg(F.count("*"), F.sum(F.size("__w"))).first()
-        stats = _Q52_STATS_CACHE[k52] = (int(n), int(tdl))
+        return int(n), int(tdl)
+
+    stats = memo(spark, sf_dir, "q52_corpus_stats", ("documents",), corpus_stats)
     return bm25_rank(
         d, list(_Q52_TERMS), "text", "doc_id", topk=10, corpus_stats=stats
     )
@@ -4236,7 +4046,6 @@ def q70_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q71_M = 4   # subspaces (64-dim -> 16 dims each)
 _Q71_K = 8   # codes per subspace (3 bits); vector serves from 4 codes
-_Q71_CODEBOOK_CACHE: dict[tuple[str, str], list] = {}
 
 _Q71_ORACLE = f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -4288,11 +4097,10 @@ def q71_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdc_makanmana_spark.operators.ann import pq_seed_codebooks, pq_topk
 
     e = _t(spark, sf_dir, "embeddings")
-    k71 = _cache_key(spark, sf_dir, "embeddings")
-    books = _Q71_CODEBOOK_CACHE.get(k71)
-    if books is None:
-        books = pq_seed_codebooks(e, m=_Q71_M, k=_Q71_K, dim=64)
-        _Q71_CODEBOOK_CACHE[k71] = books
+    books = memo(
+        spark, sf_dir, "q71_codebooks", ("embeddings",),
+        lambda: pq_seed_codebooks(e, m=_Q71_M, k=_Q71_K, dim=64),
+    )
     return pq_topk(e, books, _QUERY_VEC, k_top=10)
 
 
@@ -6155,43 +5963,51 @@ def q100_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_BUCKETED_TABLES: set[str] = set()
 _Q101_BUCKETS = 16
+_Q101_COLS = {
+    "orders": ("o_orderkey", "o_orderpriority"),
+    "lineitem": ("l_orderkey", "l_extendedprice", "l_discount"),
+}
 
 
-def _cobucketed_orders_lineitem(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+def _cobucketed_orders_lineitem(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
     """orders + lineitem persisted CO-BUCKETED on the order key
     (sources/layout.py write_bucketed, _Q101_BUCKETS buckets each) —
     the pay-the-shuffle-once storage layout for a fact-fact join that
-    runs every day at 100 TB. Table names carry the source fingerprint
-    digest, so a regenerated sf_dir registers fresh tables instead of
-    serving stale buckets; registration is per-process (catalog
-    entries are session-scoped), with the data dirs under the artifact
-    root."""
+    runs every day at 100 TB. Both tables are ONE committed artifact
+    (`serve/{orders,lineitem}`), written once and never rewritten,
+    whose path is memoized; each session registers its dirs as
+    external bucketed tables, because catalog entries are
+    session-scoped state the memo must not hold. Table names carry the
+    artifact's fingerprint digest, so a regenerated sf_dir registers
+    fresh tables instead of serving stale buckets."""
     from cdc_makanmana_spark.sources.layout import write_bucketed
 
-    base = _artifact_basename(
-        _cache_key(spark, sf_dir, "orders", "lineitem"),
-        "q101",
-        f"b={_Q101_BUCKETS}",
+    tables, params = tuple(_Q101_COLS), f"b={_Q101_BUCKETS},v2"
+
+    def build(work: str) -> None:
+        for t, cols in _Q101_COLS.items():
+            write_bucketed(
+                _t(spark, sf_dir, t).select(*cols), f"q101_build_{t}", [cols[0]],
+                n_buckets=_Q101_BUCKETS, path=f"{work}/serve/{t}",
+            )
+            spark.sql(f"DROP TABLE q101_build_{t}")  # external: files stay
+
+    path = memo(
+        spark, sf_dir, "q101", tables,
+        lambda: _streamed_artifact(spark, sf_dir, "q101", tables, params, build, "serve"),
+        params,
     )
-    to, tl = f"{base}_orders", f"{base}_lineitem"
-    if to not in _BUCKETED_TABLES:
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-        li = _t(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice", "l_discount"
-        )
-        root = _artifact_root()
-        write_bucketed(
-            o, to, ["o_orderkey"], n_buckets=_Q101_BUCKETS,
-            path=os.path.join(root, to),
-        )
-        write_bucketed(
-            li, tl, ["l_orderkey"], n_buckets=_Q101_BUCKETS,
-            path=os.path.join(root, tl),
-        )
-        _BUCKETED_TABLES.add(to)
-    return to, tl
+    names = tuple(f"{os.path.basename(path)}_{t}" for t in _Q101_COLS)
+    for name, (t, cols) in zip(names, _Q101_COLS.items()):
+        if not spark.catalog.tableExists(name):
+            schema = spark.read.parquet(f"{path}/{t}").schema
+            ddl = ", ".join(f"{c.name} {c.dataType.simpleString()}" for c in schema)
+            spark.sql(
+                f"CREATE TABLE IF NOT EXISTS {name} ({ddl}) USING parquet CLUSTERED "
+                f"BY ({cols[0]}) INTO {_Q101_BUCKETS} BUCKETS LOCATION '{path}/{t}'"
+            )
+    return names
 
 
 @query(
@@ -7128,13 +6944,6 @@ def q111_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q112_MERGES = 32
 _Q112_NORM = r"trim(regexp_replace(lower(text), '[ \t\n\r\f\x0B]+', ' ', 'g'))"
-# merge list per corpus snapshot (the committed-build pattern of
-# _sparse_coactivity_edges / _Q48_M_CACHE): training is deterministic
-# in the corpus, so one in-process build serves every later call —
-# the 32 sequential argmax collects (~10 s of pure job latency) are
-# the OFFLINE build; tokenization is the per-call declared work. The
-# oracle still replays training from scratch on every run.
-_Q112_MERGE_CACHE: dict[tuple[str, str], list[tuple[str, str]]] = {}
 
 
 def _q112_oracle_sql() -> str:
@@ -7235,8 +7044,10 @@ def q112_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bpe_train_merges`` — word-frequency table once, then
     vocabulary-sized iterations; the per-iteration argmax collect is
     ONE row, the documented bounded-scalar pattern; trained once per
-    corpus snapshot and cached like the sparse-graph artifact — the
-    build is deterministic in the corpus), tokenize every
+    corpus snapshot and memoized in the artifact store — the build is
+    deterministic in the corpus, and its {_Q112_MERGES} sequential
+    argmax collects are the OFFLINE build; the oracle still replays
+    training on every run), tokenize every
     document with the learned list (``bpe_tokenize`` — distinct words
     tokenized once, token arrays rejoined through a broadcast), and
     emit per-doc token count, distinct-token count and an md5 sequence
@@ -7258,11 +7069,10 @@ def q112_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    k = _cache_key(spark, sf_dir, "documents")
-    merges = _Q112_MERGE_CACHE.get(k)
-    if merges is None:
-        merges = bpe_train_merges(docs, "text", n_merges=_Q112_MERGES, min_freq=2)
-        _Q112_MERGE_CACHE[k] = merges
+    merges = memo(
+        spark, sf_dir, "q112_merges", ("documents",),
+        lambda: bpe_train_merges(docs, "text", n_merges=_Q112_MERGES, min_freq=2),
+    )
     toks = bpe_tokenize(docs, "text", "doc_id", merges)
     return toks.select(
         "doc_id",
