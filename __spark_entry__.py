@@ -8,13 +8,16 @@ smoke check and hash-diffs each ``queries()[name]`` against
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+# the driver imports this module from a foreign cwd
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from cdc_makanmana_spark.plans.queries import ORACLE_SQL, QUERIES, flagship
 
@@ -25,53 +28,39 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # Driver-window rotation (round 11). The driver's correctness harness
-# checks the FIRST 50 entries of queries() in declaration order.
-# Certification history: CORRECTNESS_r10 carries 50/50 rows for
-# q01-q17, q23, q25, q27, q30, q31, q37, q39, q46, q48, q61, q67,
-# q71, q73-q76, q78-q85, q92, q95, q101, q105, q106, q109-q112
-# (_R10_CERTIFIED below); everything else last certified r9 or
-# earlier. This round leads with the queries whose PLANS r11 changed
-# — q59 (exact-tier scans fused into one lazy plan) and q50 (lazy
-# batch signatures in the serve path) — plus q49: the r10 verdict's
-# one open gap (q49/q50's plans changed via the shared SQL-text
-# minhash/band-bucket helpers in r10, but their certificates predate
-# that rewrite and neither sat in the r10 window). The remaining 47
-# slots fill stalest-first, which pulls in every r8-and-older
-# certificate plus most of the r9 block. New queries (q113+)
-# auto-front via _KNOWN_MAX.
+# checks the FIRST 50 entries of queries() in declaration order. This
+# round leads with the queries whose PLANS r11 changed — q59
+# (exact-tier scans fused into one lazy plan) and q50 (lazy batch
+# signatures in the serve path) — plus q49: the r10 verdict's one open
+# gap (q49/q50's plans changed via the shared SQL-text minhash/
+# band-bucket helpers in r10, but their certificates predate that
+# rewrite and neither sat in the r10 window). The remaining 47 slots
+# fill stalest-first, which pulls in every r8-and-older certificate
+# plus most of the r9 block. New queries (q113+) auto-front via
+# _KNOWN_MAX.
 _ROTATION_FRONT = [
     "q59_approx_group_sketches",
     "q50_dedup_incremental_batch",
     "q49_benchmark_decontamination",
 ]
+
+
+def _num(name: str) -> int:
+    return int(name.split("_", 1)[0][1:])
+
+
+def _certified(rnd: int) -> set[int]:
+    """Query numbers whose row in the driver's CORRECTNESS_r<rnd>
+    certificate hash-matched the oracle."""
+    with open(os.path.join(_HERE, f"CORRECTNESS_r{rnd:02d}.json")) as f:
+        rows = json.load(f)
+    return {_num(n) for n, r in rows.items() if r.get("hash_match") is True}
+
+
 # round each query number last earned a driver CORRECTNESS row
-_R10_CERTIFIED = (
-    set(range(1, 18))
-    | {23, 25, 27, 30, 31, 37, 39, 46, 48, 61, 67, 71}
-    | set(range(73, 77))
-    | set(range(78, 86))
-    | {92, 95, 101, 105, 106}
-    | set(range(109, 113))
-)
-_R9_CERTIFIED = (
-    set(range(33, 37))
-    | set(range(38, 50))
-    | set(range(51, 59))
-    | set(range(60, 67))
-    | set(range(68, 73))
-    | {76, 77, 87, 93}
-    | set(range(96, 101))
-    | set(range(107, 111))
-    | {112}
-) - _R10_CERTIFIED
-_R8_CERTIFIED = (
-    {59, 104, 110, 23, 24, 37, 50, 67, 95}
-    | set(range(86, 93))
-    | {94}
-    | set(range(101, 104))
-    | set(range(1, 23))
-    | set(range(25, 33))
-) - _R9_CERTIFIED - _R10_CERTIFIED
+_R10_CERTIFIED = _certified(10)
+_R9_CERTIFIED = _certified(9) - _R10_CERTIFIED
+_R8_CERTIFIED = _certified(8) - _R9_CERTIFIED - _R10_CERTIFIED
 # highest query number existing when this rotation was written: anything
 # above it is NEW and auto-fronts even if _ROTATION_FRONT wasn't edited —
 # a brand-new query must never ship outside the driver's 50-entry window
@@ -80,22 +69,19 @@ _KNOWN_MAX = 112
 
 
 def _rotated(names: list[str]) -> list[str]:
-    def num(n: str) -> int:
-        return int(n.split("_", 1)[0][1:])
-
     def staleness(n: str) -> int:  # lower sorts first = stalest
-        if num(n) in _R10_CERTIFIED:
+        if _num(n) in _R10_CERTIFIED:
             return 3
-        if num(n) in _R9_CERTIFIED:
+        if _num(n) in _R9_CERTIFIED:
             return 2
-        if num(n) in _R8_CERTIFIED:
+        if _num(n) in _R8_CERTIFIED:
             return 1
         return 0  # pre-r8 certificates — oldest on the surface
 
-    front = sorted((n for n in names if num(n) > _KNOWN_MAX), key=num)
+    front = sorted((n for n in names if _num(n) > _KNOWN_MAX), key=_num)
     front += [n for n in _ROTATION_FRONT if n in names and n not in front]
     rest = [n for n in names if n not in front]
-    rest.sort(key=lambda n: (staleness(n), num(n)))
+    rest.sort(key=lambda n: (staleness(n), _num(n)))
     return front + rest
 
 

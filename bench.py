@@ -8,6 +8,14 @@ line: {"metric": ..., "value": total_sec, "unit": "sec",
 Each query is forced with the noop sink (full execution, no
 driver-side row transfer — we measure the engine, not py4j).
 
+BENCH_LAST.json holds the printed object plus ``layers``, one record
+per query: ``build_s``/``exec_s`` (the min pass split at the end of
+plan construction; they sum to the query's time), ``cold_s`` (its wall
+in the untimed exact-plan warm pass, which builds its artifacts; null
+when that pass is skipped) and the Spark counters of its last timed
+run (``build_jobs``, ``jobs``, ``stages``, shuffle and spill bytes),
+read outside the timed region.
+
 Media tier: q110/q111 read the committed 1x fixtures unless
 CDC_MEDIA_FIXTURES points at a gen_media_fixtures --scale N --out
 root. ORGANIC-SCALE runs must set it to the matching media scale
@@ -28,12 +36,126 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from cdc_makanmana_spark.session import get_spark, release_materialized
 from cdc_makanmana_spark.plans.queries import QUERIES
+from perfbench.harness import SparkCounters, calibrate, sum_counters
+
+# per-query Spark counters kept in the layer record
+LAYER_COUNTERS = ("jobs", "stages", "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes")
+
+
+def _boundary(spark) -> None:
+    """The untimed end of every query run."""
+    # Drop cached blocks left by operators that persist() small
+    # intermediates (minhash/simhash self-joins): stale cache otherwise
+    # accumulates heap pressure that taxes later queries with GC pauses.
+    spark.catalog.clearCache()
+    # localCheckpoint blocks are invisible to clearCache and survive GC
+    # across the py4j boundary, so without this the iterative queries'
+    # blocks pile up all session (measured: q77 at sf1 ran 11.9 s late
+    # in a 100-plan session vs 6.7 s fresh).
+    release_materialized(spark)
+    # A 48-plan session carries heap garbage (codegen classes, shuffle
+    # bookkeeping) whose collection otherwise lands INSIDE later
+    # queries' timings — measured round 4 as part of a uniform ~11%
+    # in-session tax on unchanged plans vs running the same queries alone.
+    spark._jvm.System.gc()
+
+
+def _pass(spark, queries, sf_dir, counters: SparkCounters | None = None) -> dict[str, dict]:
+    """Run every query once to the noop sink; per query, its wall time
+    and the split at the end of plan construction, plus its Spark
+    counters when ``counters`` is given."""
+    sc = spark.sparkContext
+    out: dict[str, dict] = {}
+    for name, fn in queries.items():
+        sc.setJobGroup(f"{name}.build", name)
+        t0 = time.time()
+        df = fn(spark, sf_dir)
+        t1 = time.time()
+        sc.setJobGroup(f"{name}.exec", name)
+        df.write.format("noop").mode("overwrite").save()
+        wall = round(time.time() - t0, 3)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        build = round(t1 - t0, 3)
+        rec = {"wall": wall, "build_s": build, "exec_s": round(wall - build, 3)}
+        if counters is not None:
+            groups = counters.harvest()
+            total = sum_counters(groups)
+            rec["counters"] = {
+                "build_jobs": groups.get(f"{name}.build", {}).get("jobs", 0),
+                **{k: total[k] for k in LAYER_COUNTERS},
+            }
+        out[name] = rec
+        _boundary(spark)
+    return out
+
+
+def measure(spark, queries, sf_dir: str, warm_dir: str) -> dict:
+    """The bench result for ``queries`` at ``sf_dir``, with ``layers``."""
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1).rstrip(".")) if m else -1.0
+
+    # Warm every plan once at the smallest sf: whole-stage codegen
+    # compiles per plan shape and caches the generated class, so the
+    # timed sf run measures execution, not first-call JIT/classloading.
+    _pass(spark, queries, warm_dir)
+
+    # Exact-plan warm pass at the TIMED sf (untimed). Several queries
+    # embed sf-derived build artifacts as PLAN LITERALS (q71 PQ
+    # codebooks, q39 IVF centers) or build committed on-disk indexes on
+    # first call (q50, the q103-q107 streaming replays): for those the
+    # sf0.001 warm compiles a DIFFERENT codegen class than the timed
+    # plan, so the first timed pass pays artifact build + fresh JIT and
+    # a min-of-3 can land on a half-warmed session (measured: q71
+    # 1.55-2.06 s across otherwise-identical sessions; the r6 judge
+    # flagged the spread). One full untimed pass makes every timed pass
+    # a pure served-path measurement; its walls are the cold times.
+    # Gated to sf <= 0.2 so the x10/x100 organic probes don't double
+    # their wall — override with SPARK_GRAFT_FULL_WARM=1/0.
+    cold: dict[str, dict] = {}
+    _fw = os.environ.get("SPARK_GRAFT_FULL_WARM", "")
+    if (_fw == "1" or (_fw != "0" and 0 <= sf <= 0.2)) and sf_dir != warm_dir:
+        cold = _pass(spark, queries, sf_dir)
+
+    # Host-speed calibration, min-of-3. Round 3 recorded a uniform
+    # ~1.2x drift across UNCHANGED trivial plans — host-level, not plan
+    # regressions (bisected round 4: the same 39 queries alone in a
+    # fresh JVM still ran 1.2x r2's wall on plans whose shape did not
+    # change). This number lets a reader normalize cross-round totals
+    # by host speed instead of guessing.
+    cal = min(round(calibrate(spark), 3) for _ in range(3))
+
+    # Min of three timed passes per query: the VM host occasionally
+    # stalls a single run by 10-20× (measured: same plan 6 s and 93 s
+    # back-to-back); the min reflects engine cost, not host noise. The
+    # counters are read in the last pass, after each query.
+    passes = [
+        _pass(spark, queries, sf_dir, SparkCounters(spark) if k == 2 else None) for k in range(3)
+    ]
+    timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
+    for name in queries:
+        best = min((p[name] for p in passes), key=lambda r: r["wall"])
+        timings[name] = best["wall"]
+        layers[name] = {
+            "build_s": best["build_s"],
+            "exec_s": best["exec_s"],
+            "cold_s": cold[name]["wall"] if cold else None,
+            **passes[-1][name]["counters"],
+        }
+    return {
+        "metric": "declared_query_surface_total",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "calibration_sec": cal,
+        "sf": sf,
+        "media_fixtures": os.environ.get("CDC_MEDIA_FIXTURES", "fixtures (committed 1x)"),
+        "layers": layers,
+    }
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else -1.0
     # Optional subset (comma-separated names): lets a fresh JVM bench an
     # exact historical query set, isolating per-session overhead (codegen
     # cache, heap shape) from plan regressions when comparing rounds.
@@ -46,104 +168,24 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm every plan once at the smallest sf: whole-stage codegen
-    # compiles per plan shape and caches the generated class, so the
-    # timed sf run measures execution, not first-call JIT/classloading.
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
-    for fn in queries.values():
-        fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-
-    # Exact-plan warm pass at the TIMED sf (untimed). Several queries
-    # embed sf-derived build artifacts as PLAN LITERALS (q71 PQ
-    # codebooks, q39 IVF centers) or build committed on-disk indexes on
-    # first call (q50, the q103-q107 streaming replays): for those the
-    # sf0.001 warm compiles a DIFFERENT codegen class than the timed
-    # plan, so the first timed pass pays artifact build + fresh JIT and
-    # a min-of-3 can land on a half-warmed session (measured: q71
-    # 1.55-2.06 s across otherwise-identical sessions; the r6 judge
-    # flagged the spread). One full untimed pass makes every timed pass
-    # a pure served-path measurement. Gated to sf <= 0.2 so the x10/
-    # x100 organic probes don't double their wall — override with
-    # SPARK_GRAFT_FULL_WARM=1/0.
-    _fw = os.environ.get("SPARK_GRAFT_FULL_WARM", "")
-    if (_fw == "1" or (_fw != "0" and 0 <= sf <= 0.2)) and sf_dir != warm_dir:
-        for fn in queries.values():
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    # Drop cached blocks left by operators that persist() small
-    # intermediates (minhash/simhash self-joins) before the timed pass
-    # — stale cache from the warmup otherwise accumulates heap pressure
-    # that taxes late queries with GC pauses. localCheckpoint blocks
-    # need the explicit release; clearCache doesn't see them.
-    spark.catalog.clearCache()
-    release_materialized(spark)
-
-    # Host-speed calibration: a fixed synthetic job (shuffle + agg over
-    # spark.range — no IO, no query-surface code) timed min-of-3. Round
-    # 3 recorded a uniform ~1.2x drift across UNCHANGED trivial plans —
-    # host-level, not plan regressions (bisected round 4: the same 39
-    # queries alone in a fresh JVM still ran 1.2x r2's wall on plans
-    # whose shape did not change). This number lets a reader normalize
-    # cross-round totals by host speed instead of guessing.
-    cal = float("inf")
-    for _ in range(3):
-        t0 = time.time()
-        spark.range(0, 50_000_000, 1, 32).selectExpr("id % 1000 AS k", "id AS v").groupBy(
-            "k"
-        ).sum("v").write.format("noop").mode("overwrite").save()
-        cal = min(cal, round(time.time() - t0, 3))
-
-    # Min of three timed passes per query: the VM host occasionally
-    # stalls a single run by 10-20× (measured: same plan 6 s and 93 s
-    # back-to-back); the min reflects engine cost, not host noise.
-    timings: dict[str, float] = {}
-    for _pass in range(3):
-        for name, fn in queries.items():
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = round(time.time() - t0, 3)
-            timings[name] = min(timings.get(name, dt), dt)
-            spark.catalog.clearCache()
-            # Drop the finished query's localCheckpoint blocks: they are
-            # invisible to clearCache and survive GC across the py4j
-            # boundary, so without this the iterative queries' blocks
-            # pile up all session (measured: q77 at sf1 ran 11.9 s late
-            # in a 100-plan session vs 6.7 s fresh).
-            release_materialized(spark)
-            # Untimed GC at the query boundary: a 48-plan session carries
-            # heap garbage (codegen classes, shuffle bookkeeping) whose
-            # collection otherwise lands INSIDE later queries' timings —
-            # measured round 4 as part of a uniform ~11% in-session tax
-            # on unchanged plans vs running the same queries alone.
-            spark._jvm.System.gc()
-
-    line = json.dumps(
-        {
-            "metric": "declared_query_surface_total",
-            "value": round(sum(timings.values()), 3),
-            "unit": "sec",
-            "queries": timings,
-            "calibration_sec": cal,
-            "sf": sf,
-            "media_fixtures": os.environ.get(
-                "CDC_MEDIA_FIXTURES", "fixtures (committed 1x)"
-            ),
-        }
-    )
+    result = measure(spark, queries, sf_dir, warm_dir)
+    layers = result.pop("layers")
+    line = json.dumps(result)
     print(line)
-    # Belt-and-suspenders copy of the SAME one-line JSON (r10 lesson:
-    # the round-over-round comparison silently emptied because the
-    # 112-query line overflowed a 2,000-char output-tail capture and
-    # never parsed). The printed contract is unchanged; this file just
-    # guarantees the full object survives any tail truncation.
+    # Belt-and-suspenders copy of the printed object plus ``layers``
+    # (r10 lesson: the round-over-round comparison silently emptied
+    # because the 112-query line overflowed a 2,000-char output-tail
+    # capture and never parsed). The printed contract is unchanged; this
+    # file guarantees the full object survives any tail truncation.
     try:
         with open(
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LAST.json"),
             "w",
         ) as f:
-            f.write(line + "\n")
+            f.write(json.dumps({**result, "layers": layers}) + "\n")
     except OSError:
         pass  # read-only checkout: the printed line is the contract
     spark.stop()

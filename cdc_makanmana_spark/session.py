@@ -46,6 +46,9 @@ def get_spark(app_name: str = "cdc-makanmana-spark") -> SparkSession:
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        # the console progress bar shares the terminal line with a
+        # caller's own output and garbles line-based filtering of it
+        .config("spark.ui.showConsoleProgress", "false")
         # Status-store retention scaled down: the AppStatus/SQL
         # listeners retain up to 100k task rows + 1000 stages + 1000
         # SQL executions EVEN WITH THE UI OFF, and in local mode that
