@@ -8,13 +8,13 @@ line: {"metric": ..., "value": total_sec, "unit": "sec",
 Each query is forced with the noop sink (full execution, no
 driver-side row transfer — we measure the engine, not py4j).
 
-BENCH_LAST.json holds the printed object plus ``layers``, one record
-per query: ``build_s``/``exec_s`` (the min pass split at the end of
-plan construction; they sum to the query's time), ``cold_s`` (its wall
-in the untimed exact-plan warm pass, which builds its artifacts; null
-when that pass is skipped) and the Spark counters of its last timed
-run (``build_jobs``, ``jobs``, ``stages``, shuffle and spill bytes),
-read outside the timed region.
+.benchmarks/BENCH_LAST.json (ignored by git) holds the printed object
+plus ``layers``, one record per query: ``build_s``/``exec_s`` (the min
+pass split at the end of plan construction; they sum to the query's
+time), ``cold_s`` (its wall in the untimed exact-plan warm pass, which
+builds its artifacts; null when that pass is skipped) and the Spark
+counters of its last timed run (``build_jobs``, ``jobs``, ``stages``,
+shuffle and spill bytes), read outside the timed region.
 
 Media tier: q110/q111 read the committed 1x fixtures unless
 CDC_MEDIA_FIXTURES points at a gen_media_fixtures --scale N --out
@@ -181,10 +181,9 @@ def main() -> None:
     # capture and never parsed). The printed contract is unchanged; this
     # file guarantees the full object survives any tail truncation.
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LAST.json"),
-            "w",
-        ) as f:
+        out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".benchmarks")
+        os.makedirs(out_dir, exist_ok=True)
+        with open(os.path.join(out_dir, "BENCH_LAST.json"), "w") as f:
             f.write(json.dumps({**result, "layers": layers}) + "\n")
     except OSError:
         pass  # read-only checkout: the printed line is the contract

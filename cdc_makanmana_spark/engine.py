@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from cdc_makanmana_spark.functions.classify import keyword_classes, keyword_flag_with_veto
 from cdc_makanmana_spark.functions.geo import format_distance
-from cdc_makanmana_spark.operators.enrich import prefix_fallback_join
+from cdc_makanmana_spark.operators.enrich import prefix_fallback_lookup
 from cdc_makanmana_spark.operators.radius import radius_query
 from cdc_makanmana_spark.operators.search import multi_column_search, route_search_term
 from cdc_makanmana_spark.operators.similarity import similarity_join
@@ -168,22 +168,24 @@ class MakanmanaEngine:
         """F1/F2 + G3: router — a 6-digit postal token triggers the
         geo branch (geocode via postal dim → radius query, 10 km cutoff
         per merchantUtils.ts:56); anything else is the multi-column
-        substring filter; blank passes through (merchantUtils.ts:18-34)."""
+        substring filter; blank passes through (merchantUtils.ts:18-34).
+
+        The geocode is the one eager step: one aggregate over the
+        postal dim pruned to the token's 3-digit prefix
+        (``prefix_fallback_lookup``, the same exact → prefix → default
+        rule as ``prefix_fallback_join``). The center comes back as
+        Python floats, so the radius bounding box stays literal
+        comparisons that reach the snapshot scan as pushed filters."""
         kind, payload = route_search_term(term)
         if kind == "empty":
             return self
         if kind == "postal" and postal_dim is not None:
-            center = (
-                prefix_fallback_join(
-                    self.spark.createDataFrame([(payload,)], "postal string"),
-                    postal_dim,
-                    "postal",
-                    "postal",
-                    ["lat", "lon"],
-                    defaults={"lat": 1.3521, "lon": 103.8198},  # locationUtils.ts:72
-                )
-                .select("lat", "lon")
-                .first()
+            center = prefix_fallback_lookup(
+                postal_dim,
+                "postal",
+                payload,
+                ["lat", "lon"],
+                defaults={"lat": 1.3521, "lon": 103.8198},  # locationUtils.ts:72
             )
             return self.radius(center["lat"], center["lon"], radius_km)
         cols = [c for c in _SEARCH_STRING_COLS if c in self.df.columns]

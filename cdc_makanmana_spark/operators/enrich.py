@@ -17,7 +17,7 @@ task at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 
@@ -47,9 +47,7 @@ def prefix_fallback_join(
     (duplicate postals appear once the supplier pool outgrows the
     postal space, and Spark and DuckDB picked different rows).
     """
-    rep = F.min(
-        F.struct(F.col(dim_key), *[F.col(c) for c in value_cols])
-    )
+    rep = F.min(_representative(dim_key, value_cols))
     exact = dim.groupBy(F.col(dim_key).alias("__k")).agg(rep.alias("__xrep"))
     prefix = dim.groupBy(
         F.substring(F.col(dim_key), 1, prefix_len).alias("__p")
@@ -63,14 +61,56 @@ def prefix_fallback_join(
         "left",
     )
     for c in value_cols:
-        chain: list[Column] = [
-            F.col("__xrep").getField(c),
-            F.col("__prep").getField(c),
-        ]
-        if defaults and c in defaults:
-            chain.append(F.lit(defaults[c]))
-        out = out.withColumn(c, F.coalesce(*chain))
+        out = out.withColumn(c, _tiered(c, defaults))
     return out.drop("__k", "__p", "__xrep", "__prep")
+
+
+def prefix_fallback_lookup(
+    dim: DataFrame,
+    dim_key: str,
+    key: str,
+    value_cols: list[str],
+    prefix_len: int = 3,
+    defaults: dict[str, float | str] | None = None,
+) -> Row:
+    """:func:`prefix_fallback_join` for ONE key of at least
+    ``prefix_len`` characters, collected eagerly: a Row of
+    ``value_cols`` equal to what the join gives a fact row carrying
+    ``key``.
+
+    One aggregate over the dim rows that share the key's prefix computes
+    both tiers at once (exact: the representative of the rows whose key
+    equals ``key``; prefix: the representative of all of them), then the
+    same per-column coalesce applies. ``startswith`` reaches a parquet
+    scan as a pushed filter. Against a one-row fact frame the join form
+    runs 6 jobs; this aggregate runs 2 (its partial stage and its
+    result)."""
+    rep = _representative(dim_key, value_cols)
+    k = F.col(dim_key)
+    return (
+        dim.filter(k.startswith(key[:prefix_len]))
+        .agg(
+            F.min(F.when(k == key, rep)).alias("__xrep"),
+            F.min(rep).alias("__prep"),
+        )
+        .select(*[_tiered(c, defaults).alias(c) for c in value_cols])
+        .first()
+    )
+
+
+def _representative(dim_key: str, value_cols: list[str]) -> Column:
+    """The struct whose min picks a tier's representative dim row (see
+    :func:`prefix_fallback_join`)."""
+    return F.struct(F.col(dim_key), *[F.col(c) for c in value_cols])
+
+
+def _tiered(c: str, defaults: dict[str, float | str] | None) -> Column:
+    """Column ``c`` of the exact tier (``__xrep``), else of the prefix
+    tier (``__prep``), else its default."""
+    chain: list[Column] = [F.col("__xrep").getField(c), F.col("__prep").getField(c)]
+    if defaults and c in defaults:
+        chain.append(F.lit(defaults[c]))
+    return F.coalesce(*chain)
 
 
 def priority_coalesce_enrich(

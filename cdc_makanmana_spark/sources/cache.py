@@ -19,12 +19,16 @@ from __future__ import annotations
 import json
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cdc_makanmana_spark import fs
 
 # the current snapshot plus one prior (reader isolation)
 _KEEP_VERSIONS = 2
+# per-version schema file; Spark's reader skips ``_``-prefixed names
+_SCHEMA_FILE = "_schema.json"
 
 
 class SnapshotCache:
@@ -38,6 +42,15 @@ class SnapshotCache:
     marker, so a crash anywhere mid-save leaves the previous committed
     snapshot live. The prior version stays until the next save commits
     (reader isolation for lazy plans already handed out).
+
+    Each version dir also holds ``_schema.json`` (the saved frame's
+    ``schema.json()``), written before the commit so the marker covers
+    it. ``load`` reads with that schema and so runs no footer-inference
+    job; the file sources read every column as nullable either way, so
+    the loaded schema equals the inferred one. A version without the
+    file (saved before it existed) falls back to inference. The count
+    in the sidecar is taken from the write itself (an ``Observation``
+    on the written frame), not from a re-read.
 
     Version dirs written BEFORE the marker protocol are invisible to
     these readers; migrate once with ``fs.adopt_unmarked_versions``."""
@@ -77,14 +90,17 @@ class SnapshotCache:
         return age_h < self.ttl_hours and self._current_path() is not None
 
     def save(self, df: DataFrame, now_s: float | None = None) -> int:
-        """Write snapshot + watermark metadata (S5). Returns row count
-        (counted once, reused for the stats surface)."""
+        """Write snapshot + watermark metadata (S5). Returns the row
+        count, observed during the write (no job runs after it) and
+        reused for the stats surface."""
         version = fs.next_version(self.spark, self.path)
         staged = f"{self.path}/_staging_v{version}"
         final = f"{self.path}/v{version}"
-        df.write.mode("overwrite").parquet(staged)
+        rows = Observation()
+        df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(staged)
+        fs.write_text(self.spark, f"{staged}/{_SCHEMA_FILE}", df.schema.json())
         fs.commit(self.spark, staged, final)
-        n = self.spark.read.parquet(final).count()
+        n = rows.get["n"]
         fs.write_text(
             self.spark,
             self._meta_path,
@@ -107,7 +123,8 @@ class SnapshotCache:
         (versions survive until pruned by subsequent saves — the same
         read-your-history lever a transaction-log table format sells).
         Raises ``FileNotFoundError`` for a missing or torn
-        (uncommitted) version."""
+        (uncommitted) version. Either form reads with the version's own
+        ``_schema.json``."""
         if version is not None:
             candidate = f"{self.path}/v{version}"
             if not fs.is_committed(self.spark, candidate):
@@ -115,11 +132,17 @@ class SnapshotCache:
                     f"no committed snapshot v{version} under {self.path} "
                     f"(committed: {self.versions()})"
                 )
-            return self.spark.read.parquet(candidate)
+            return self._read(candidate)
         current = self._current_path()
         if current is None:
             raise FileNotFoundError(f"no committed snapshot under {self.path}")
-        return self.spark.read.parquet(current)
+        return self._read(current)
+
+    def _read(self, version_dir: str) -> DataFrame:
+        raw = fs.read_text(self.spark, f"{version_dir}/{_SCHEMA_FILE}")
+        if raw is None:  # saved before the schema file: infer from footers
+            return self.spark.read.parquet(version_dir)
+        return self.spark.read.schema(StructType.fromJson(json.loads(raw))).parquet(version_dir)
 
     def versions(self) -> list[int]:
         """Committed snapshot versions available for time travel."""

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -23,3 +24,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def jobs_run(spark):
+    """``jobs_run(fn)`` -> ``(fn(), number of Spark jobs fn ran)``,
+    counted through a job group of its own and the status tracker."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs_run-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker lags the bus
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

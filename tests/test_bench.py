@@ -1,5 +1,5 @@
 """``bench.py``'s contract: the printed keys, and the per-query layer
-record written next to them in BENCH_LAST.json."""
+record written next to them in .benchmarks/BENCH_LAST.json."""
 
 from __future__ import annotations
 

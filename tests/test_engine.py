@@ -79,6 +79,67 @@ def test_search_postal_prefix_fallback(eng, spark):
     assert {r.id for r in out.collect()} == {"m1", "m2", "m5"}
 
 
+def test_postal_search_builds_with_one_geocode_and_keeps_pushed_bounds(eng, spark, tmp_path, jobs_run):
+    """Building a postal search over parquet runs only the geocode
+    aggregate (at most 2 jobs), and the radius bounding box still
+    reaches the snapshot scan as pushed LAT/LON range filters."""
+    eng.df.write.parquet(str(tmp_path / "snap"))
+    spark.createDataFrame(
+        [("419701", 1.3200, 103.9000), ("238801", 1.3040, 103.8320)],
+        "postal string, lat double, lon double",
+    ).write.parquet(str(tmp_path / "postal"))
+    snap = MakanmanaEngine(spark.read.parquet(str(tmp_path / "snap")))
+    postal_dim = spark.read.parquet(str(tmp_path / "postal"))
+
+    built, n_jobs = jobs_run(lambda: snap.search("419701", postal_dim=postal_dim, radius_km=5.0))
+    assert n_jobs <= 2
+    plan = built.df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    pushed = next(l for l in plan.splitlines() if "PushedFilters" in l and "LAT" in l)
+    for bound in ("GreaterThanOrEqual(LAT,", "LessThanOrEqual(LAT,",
+                  "GreaterThanOrEqual(LON,", "LessThanOrEqual(LON,"):
+        assert bound in pushed
+    assert {r.id for r in built.df.collect()} == {"m1", "m2", "m5"}
+
+
+def test_prefix_fallback_lookup_equals_join(spark):
+    """The one-key geocode returns exactly prefix_fallback_join's
+    (lat, lon) for every tier: duplicate keys, a null lat on the exact
+    row, a prefix-only hit and a full miss that takes the default."""
+    from cdc_makanmana_spark.operators.enrich import (
+        prefix_fallback_join,
+        prefix_fallback_lookup,
+    )
+
+    dim = spark.createDataFrame(
+        [
+            ("419701", 1.3100, 103.9100),   # duplicate exact key ...
+            ("419701", 1.3000, 103.9000),   # ... min representative wins
+            ("419702", None, 103.9500),     # exact row, null lat
+            ("238001", None, 103.8000),     # null lat that is also the prefix min
+            ("238555", 1.2800, 103.8500),
+            ("560001", 1.3600, None),
+        ],
+        "postal string, lat double, lon double",
+    )
+    defaults = {"lat": 1.3521, "lon": 103.8198}
+    keys = ["419701", "419702", "419999", "238001", "238777", "560001", "999999"]
+    joined = {
+        r.postal: (r.lat, r.lon)
+        for r in prefix_fallback_join(
+            spark.createDataFrame([(k,) for k in keys], "postal string"),
+            dim, "postal", "postal", ["lat", "lon"], defaults=defaults,
+        ).collect()
+    }
+    for k in keys:
+        row = prefix_fallback_lookup(dim, "postal", k, ["lat", "lon"], defaults=defaults)
+        assert (row["lat"], row["lon"]) == joined[k], k
+    assert joined["419999"] == (1.3000, 103.9000)   # prefix-only hit
+    assert joined["419702"] == (1.3000, 103.9500)   # lat from the prefix tier
+    assert joined["999999"] == (1.3521, 103.8198)   # full miss: default
+
+
 def test_filter_category_budget_halal(eng, spark):
     assert {r.id for r in eng.filter(category="SUPERMARKET").df.collect()} == {"m4"}
     assert eng.filter(category="all").count() == 5

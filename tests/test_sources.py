@@ -700,6 +700,85 @@ def test_snapshot_time_travel(spark, tmp_path):
         cache.load(version=1)
 
 
+def test_snapshot_cache_load_runs_no_job(spark, tmp_path, jobs_run):
+    """A served read resolves the snapshot from its committed schema:
+    neither load() nor load(version) runs a footer-inference job, and
+    the loaded schema equals the one Spark infers from the files."""
+    cache = SnapshotCache(spark, str(tmp_path / "snap"), data_version="v1")
+    cache.save(spark.createDataFrame(ROWS, SCHEMA), now_s=1.0)
+    snap, n_jobs = jobs_run(cache.load)
+    assert n_jobs == 0
+    assert jobs_run(lambda: cache.load(version=1))[1] == 0
+    assert snap.schema == spark.read.parquet(f"{cache.path}/v1").schema
+    assert sorted(snap.collect()) == sorted(spark.createDataFrame(ROWS, SCHEMA).collect())
+
+
+def test_snapshot_cache_save_counts_from_the_write(spark, tmp_path, jobs_run, monkeypatch):
+    """save() returns the true row count, empty frames included, and
+    runs no job once the write is done (no count re-read)."""
+    from cdc_makanmana_spark import fs
+
+    sc = spark.sparkContext
+    commit = fs.commit
+
+    def commit_then_tag(spark_, staged, final):
+        commit(spark_, staged, final)
+        sc.setJobGroup("after-write", "after-write")
+
+    monkeypatch.setattr(fs, "commit", commit_then_tag)
+    cache = SnapshotCache(spark, str(tmp_path / "snap"), data_version="v1")
+    wide = spark.range(1000).selectExpr("id", "cast(id AS string) AS name").repartition(3)
+    for df, want in [
+        (spark.createDataFrame(ROWS, SCHEMA), 3),
+        (wide, 1000),
+        (wide.filter("id < 0"), 0),
+        (spark.createDataFrame([], SCHEMA), 0),
+    ]:
+        assert jobs_run(lambda: cache.save(df, now_s=1.0))[0] == want
+        assert cache.info(now_s=1.0)["count"] == want
+        assert cache.load().count() == want
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("after-write") == []
+
+
+def test_snapshot_cache_legacy_version_and_per_version_schema(spark, tmp_path):
+    """A version saved before the schema file existed (no _schema.json,
+    sidecar with only count/last_update_s/data_version/version) still
+    loads through load() and load(version) and still reports info().
+    Time travel reads each version with its OWN schema, not the
+    newest one."""
+    from cdc_makanmana_spark import fs
+
+    root = str(tmp_path / "snap")
+    legacy = spark.createDataFrame(ROWS, SCHEMA)
+    legacy.write.parquet(f"{root}/v1")
+    fs.mark_committed(spark, f"{root}/v1")
+    fs.write_text(
+        spark,
+        f"{root}/_cache_meta.json",
+        '{"count": 3, "last_update_s": 1700000000.0, "data_version": "v1", "version": 1}',
+    )
+    cache = SnapshotCache(spark, root, data_version="v1")
+    assert not fs.exists(spark, f"{root}/v1/_schema.json")
+    assert sorted(cache.load().collect()) == sorted(legacy.collect())
+    assert cache.load(version=1).schema == spark.read.parquet(f"{root}/v1").schema
+    assert cache.info(now_s=1_700_000_060.0)["count"] == 3
+
+    # v2 drops a column and adds one; v1 keeps its inferred schema
+    wider = legacy.drop("halal").withColumn("cuisine", F.array(F.lit("Local")))
+    cache.save(wider, now_s=1_700_000_100.0)
+    assert cache.load().columns == ["id", "name", "lat", "cuisine"]
+    assert cache.load(version=1).columns == ["id", "name", "lat", "halal"]
+
+    # v3 (schema file present) is newest; v2 is read with v2's schema
+    cache.save(legacy.select("id"), now_s=1_700_000_200.0)
+    assert cache.versions() == [2, 3]
+    assert cache.load().columns == ["id"]
+    v2 = cache.load(version=2)
+    assert v2.schema == spark.read.parquet(f"{root}/v2").schema
+    assert sorted(r.id for r in v2.collect()) == [1, 2, 3]
+
+
 def test_range_sorted_layout_enables_row_group_skipping(spark, tmp_path):
     """The data-skipping property itself, asserted from the parquet
     footers: after write_range_sorted each file's [min, max] range on
