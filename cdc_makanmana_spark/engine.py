@@ -19,20 +19,26 @@ predicates reach the scan, the halal entity-resolution broadcasts only
 its dim-scale side (the establishment table; the fact-scale match set
 is never hinted), radius queries pre-filter on a sargable bounding
 box, and sort+page plans as TakeOrderedAndProject (top-k) rather than
-a global sort.
+a global sort. The publish plan, ``enrich().resolve_halal()``, scans
+the merchants three times (the exact tier, the residual anti-join and
+the fact side of the final join) and ranks with one aggregate; its
+expressions do not depend on the data and are built once per process
+(``functions.memo``), so a rebuild costs a few hundred Py4J round
+trips instead of about 5,000.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_makanmana_spark.functions.classify import keyword_classes, keyword_flag_with_veto
 from cdc_makanmana_spark.functions.geo import format_distance
+from cdc_makanmana_spark.functions.memo import column_bundle
 from cdc_makanmana_spark.operators.enrich import prefix_fallback_lookup
 from cdc_makanmana_spark.operators.radius import radius_query
 from cdc_makanmana_spark.operators.search import multi_column_search, route_search_term
-from cdc_makanmana_spark.operators.similarity import similarity_join
+from cdc_makanmana_spark.operators.similarity import best_matches
 
 # Cuisine keyword rule table (P2 parity: src/data/merchants.ts:123-151
 # — a multi-label substring classifier with a 'Local' default).
@@ -66,6 +72,43 @@ HALAL_NEGATIVE = [
     "beer", "wine", "bar ", "pub ",
 ]
 
+
+@column_bundle
+def _enrich_columns() -> tuple[dict[str, Column], dict[str, Column]]:
+    """``enrich``'s derived columns, then the provenance column that
+    reads the new ``isHalal``."""
+    return (
+        {
+            "cuisine": keyword_classes("name", CUISINE_RULES, CUISINE_DEFAULT),
+            "isHalal": keyword_flag_with_veto(
+                F.concat_ws(" ", "name", "address"), HALAL_POSITIVE, HALAL_NEGATIVE
+            ),
+        },
+        {
+            "halalSource": F.when(F.col("isHalal"), F.lit("KEYWORD_MATCH")).otherwise(
+                F.lit("NOT_CHECKED")
+            ),
+        },
+    )
+
+
+@column_bundle
+def _resolve_columns(id_col: str) -> tuple[list[Column], Column, dict[str, Column]]:
+    """``resolve_halal``'s match projection, join condition and the
+    upgraded verdict columns (the MUIS tier outranks the keyword tier)."""
+    src = F.col("__src")
+    return (
+        [F.col("l_id").alias("__mid"), F.col("match_source").alias("__src")],
+        F.col(id_col) == F.col("__mid"),
+        {
+            "isHalal": src.isNotNull() | F.coalesce(F.col("isHalal"), F.lit(False)),
+            "halalSource": F.when(
+                src.isNotNull(), F.concat(F.lit("MUIS_VERIFIED_"), src)
+            ).otherwise(F.coalesce(F.col("halalSource"), F.lit("NOT_CHECKED"))),
+        },
+    )
+
+
 _SEARCH_STRING_COLS = ["name", "postalCode", "address", "type", "businessCategory"]
 _SEARCH_ARRAY_COLS = ["cuisine"]
 
@@ -95,23 +138,8 @@ class MakanmanaEngine:
         default Local) and the keyword-tier halal verdict with
         provenance, exactly the derive-columns projection of
         ``enhanceMerchantData`` (merchants.ts:88-99)."""
-        out = (
-            self.df.withColumn(
-                "cuisine", keyword_classes("name", CUISINE_RULES, CUISINE_DEFAULT)
-            )
-            .withColumn(
-                "isHalal",
-                keyword_flag_with_veto(
-                    F.concat_ws(" ", "name", "address"), HALAL_POSITIVE, HALAL_NEGATIVE
-                ),
-            )
-            .withColumn(
-                "halalSource",
-                F.when(F.col("isHalal"), F.lit("KEYWORD_MATCH")).otherwise(
-                    F.lit("NOT_CHECKED")
-                ),
-            )
-        )
+        derived, source = _enrich_columns()
+        out = self.df.withColumns(derived).withColumns(source)
         return self._wrap(out)
 
     def resolve_halal(
@@ -121,7 +149,7 @@ class MakanmanaEngine:
         dim table; upgrades ``isHalal``/``halalSource`` where a match
         resolves (the MUIS tier outranks the keyword tier,
         externalData.ts:526-532)."""
-        matches = similarity_join(
+        best = best_matches(
             self.df,
             establishments,
             left_name="name",
@@ -130,32 +158,18 @@ class MakanmanaEngine:
             right_id="establishment_id",
             left_postal="postalCode",
             right_postal="postal",
-        ).select(
-            F.col(f"{id_col}_l").alias("__mid"),
-            F.col("match_source").alias("__src"),
         )
-        # NO broadcast hint here: ``matches`` has one row per matched
+        matched, on, upgraded = _resolve_columns(id_col)
+        # NO broadcast hint here: ``best`` has one row per matched
         # MERCHANT — it scales with the fact side, not the dim side, so
         # pinning it to a broadcast is a driver/executor OOM at 100×.
         # AQE picks broadcast at runtime when the match set happens to
         # be small; the shuffled hash join on the key is the safe
-        # default. (similarity_join's internal broadcast of the
+        # default. (best_matches' internal broadcast of the
         # establishment DIM side remains — that side is dim-scale.)
         out = (
-            self.df.join(
-                matches.filter(F.col("__src").isNotNull()),
-                self.df[id_col] == F.col("__mid"),
-                "left",
-            )
-            .withColumn(
-                "isHalal",
-                F.col("__src").isNotNull() | F.coalesce(F.col("isHalal"), F.lit(False)),
-            )
-            .withColumn(
-                "halalSource",
-                F.when(F.col("__src").isNotNull(), F.concat(F.lit("MUIS_VERIFIED_"), F.col("__src")))
-                .otherwise(F.coalesce(F.col("halalSource"), F.lit("NOT_CHECKED"))),
-            )
+            self.df.join(best.select(*matched), on, "left")
+            .withColumns(upgraded)
             .drop("__mid", "__src")
         )
         return self._wrap(out)

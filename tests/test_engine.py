@@ -229,3 +229,94 @@ def test_page_after_plans_topk_not_offset(eng):
     )
     assert "TakeOrderedAndProject" in plan
     assert "Offset" not in plan
+
+
+_DIM_ROWS = [
+    ("h1", "Ahmad Biryani House", "419701"),            # exact, same postal
+    ("h2", "Warung Pak Alix Nasi Padang", "999999"),    # one-letter typo
+]
+
+
+@pytest.fixture
+def parquet_merchants(spark, tmp_path):
+    path = str(tmp_path / "merchants.parquet")
+    spark.createDataFrame(ROWS, MERCHANT_SCHEMA).write.parquet(path)
+    dim = spark.createDataFrame(_DIM_ROWS, "establishment_id string, name string, postal string")
+    return path, spark.read.parquet(path), dim
+
+
+def _merchant_scans(df) -> int:
+    """FileScan nodes of the merchants in the executed plan (the dim
+    has no ``postalCode`` column, and every merchant scan reads it)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum("postalCode#" in line for line in plan.splitlines() if "FileScan" in line)
+
+
+def test_resolve_halal_scans_merchants_once_per_tier(spark, parquet_merchants, jobs_run):
+    """Each tier of the entity resolution is computed once: the exact
+    tier and the residual anti-join each scan the merchants, and the
+    fact side of resolve_halal's join scans them once more (the
+    two-window form scanned them 7 times and ran 15 jobs)."""
+    from cdc_makanmana_spark.operators.similarity import best_matches
+
+    _, merchants, dim = parquet_merchants
+    out = MakanmanaEngine(merchants).enrich().resolve_halal(dim).df
+    _, jobs = jobs_run(lambda: out.write.format("noop").mode("overwrite").save())
+    assert _merchant_scans(out) == 3
+    assert jobs == 8
+
+    best = best_matches(merchants, dim, "name", "name", "id", "establishment_id",
+                        "postalCode", "postal")
+    best.write.format("noop").mode("overwrite").save()
+    assert _merchant_scans(best) == 2
+    assert {r.id: r.halalSource for r in out.collect() if r.halalSource.startswith("MUIS")} == {
+        "m1": "MUIS_VERIFIED_EXACT_POSTAL",
+        "m5": "MUIS_VERIFIED_SIMILAR_NAME",
+    }
+
+
+def _masked_plan(df) -> str:
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"#\d+L?|\b(x_)\d+", r"\1", plan)
+
+
+def test_publish_plan_builds_once_per_process(spark, parquet_merchants):
+    """The enrich and entity-resolution expressions are built once per
+    gateway: a second build of the publish plan makes a few hundred
+    Py4J round trips (about 5,000 when every build made its own), and
+    the plan equals a fresh build's and a new session's."""
+    from cdc_makanmana_spark.functions import memo
+
+    path, merchants, dim = parquet_merchants
+
+    def build(m=merchants, d=dim):
+        return MakanmanaEngine(m).enrich().resolve_halal(d).df
+
+    memo._MEMO.clear()
+    fresh = _masked_plan(build())
+    client = spark.sparkContext._gateway._gateway_client
+    calls = [0]
+    send = client.send_command
+
+    # Object detaches ("m" commands) are not counted: py4j sends them
+    # from its own queue, whenever it gets to garbage of any age.
+    def counting(command, *args, **kwargs):
+        calls[0] += not command.startswith("m\n")
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        again = build()
+    finally:
+        del client.send_command
+    assert calls[0] <= 600, calls[0]
+    assert _masked_plan(again) == fresh
+
+    other = spark.newSession()
+    in_other = build(
+        other.read.parquet(path),
+        other.createDataFrame(_DIM_ROWS, "establishment_id string, name string, postal string"),
+    )
+    assert _masked_plan(in_other) == fresh
